@@ -5,19 +5,40 @@ The reference builds one sketch per set by streaming ids through ``add``
 equivalent is a two-phase aggregation that Catalyst cannot derive for Python
 UDAFs, so it is built explicitly (SURVEY §4):
 
-  stage 1 (map side)   : ``mapInPandas`` folds each input partition's Arrow
-                         batches into ONE partial state (or one per group
-                         key — a map-side combine), emitting O(m) bytes per
-                         partition instead of O(rows).
-  stage 2 (reduce side): iterative executor-side tree merge with fanout F —
-                         ``groupBy(gid % width).applyInPandas(merge)`` —
-                         until few enough partials remain to collect;
-                         the driver folds the rest. Depth = ceil(log_F P),
-                         driver traffic O(F * m), never O(P * m).
+  stage 1 (map side)   : ONE builder, ``sketch_partials``, folds each input
+                         partition's Arrow batches into one packed state per
+                         group key (a map-side combine), emitting O(m)
+                         bytes per (partition, key) instead of O(rows). The
+                         value column is scalar or ``array<…>``; an array
+                         crosses Arrow as one row per document and is
+                         flattened in numpy, never exploded.
+  stage 2 (reduce side): ONE merge, ``_merge_fn``: merge one key's states,
+                         sum their ``rows``, keep the key. ``grouped_sketch``
+                         runs it once per key; ``tree_merge`` runs it as an
+                         executor-side tree with fanout F until few enough
+                         partials remain to collect, then the driver folds
+                         the rest. Depth = ceil(log_F P), driver traffic
+                         O(F * m), never O(P * m).
+
+A partial row is ``(key_cols... | gid, sketch, rows)``. With no keys ``gid``
+is the stage-1 partition id, so the ungrouped build is the grouped build
+without the key split.
+
+The stage-1 contract lives in ``sketch_partials`` alone:
+- dtypes: id kernels get int64, with strings and binaries hashed by JVM-side
+  xxhash64 so Arrow moves 8 bytes per item; float64 kernels (KLL, t-digest)
+  get doubles.
+- NULLs: a NULL item is dropped on every path, as SQL ``COUNT(DISTINCT)``
+  and quantile aggregates drop it. Scalar NULLs are filtered in the JVM.
+  NULL array cells and elements are dropped in numpy, paid for only by the
+  batches that hold one. A key whose items are all NULL emits no partial.
+- partitioning: ``spread_partitions`` is the one place that decides to
+  repartition: to ``input_partitions`` when given (no probe), else up to
+  ``defaultParallelism`` when the input arrives in fewer splits.
 
 Because every kernel's merge is associative + commutative, any partitioning
 and any tree shape produce bit-identical registers (tested in
-tests/test_associativity.py), mirroring the reference's merge contracts
+tests/test_property_merge.py), mirroring the reference's merge contracts
 (ref: any_sketch.py:36-105, hyper_log_log.py:217-246).
 
 Scale notes (100 TB posture):
@@ -26,25 +47,24 @@ Scale notes (100 TB posture):
   (#partitions x #groups) states, the minimum possible for a hash agg.
 - Value skew is neutralized by the map-side combine (a partition with 10^9
   repeats of one key still emits one state). Input-placement skew is
-  handled by an optional pre-repartition (``input_partitions``); Spark AQE
-  handles the rest.
-- Strings are hashed to int64 by JVM-side xxhash64 *before* entering
-  Python, so Arrow transfers 8 bytes/row and kernels stay numeric.
+  handled by the spread above; Spark AQE handles the rest.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     DoubleType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -54,42 +74,34 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     State,
 )
 
-_PARTIAL_SCHEMA = StructType(
-    [StructField("gid", LongType()), StructField("sketch", BinaryType())]
-)
+
+def spread_partitions(
+    df: DataFrame, input_partitions: int | None = None
+) -> tuple[DataFrame, int]:
+    """The one partitioning decision: ``(frame, partition count)``.
+
+    A 100 TB scan arrives in thousands of splits and is left alone; a local
+    single-file read arrives in one and is spread round-robin to
+    ``defaultParallelism`` so every core works. ``input_partitions`` forces
+    the count without probing the input's own."""
+    if input_partitions:
+        return df.repartition(input_partitions), input_partitions
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = df.rdd.getNumPartitions()
+    if n < target:
+        return df.repartition(target), target
+    return df, n
 
 
-def items_column(df: DataFrame, col: str, input_dtype: str = "int64") -> DataFrame:
-    """Project ``col`` to a single ``item`` column of the kernel's input
-    dtype. Id sketches get int64 (strings hashed JVM-side via xxhash64 so
-    Python never sees raw strings); value sketches (quantiles) get float64."""
-    dtype = dict(df.dtypes)[col]
-    c = F.col(col)
-    if dtype.startswith("array"):
-        raise ValueError("explode arrays before sketching (use explode_tokens)")
-    if input_dtype == "float64":
-        # drop nulls BEFORE the kernel: na_value=0 in the Arrow transfer
-        # would silently inject 0.0 into quantile sketches and skew low
-        # quantiles — a quantile over the raw column never sees nulls
-        return df.where(c.isNotNull()).select(c.cast("double").alias("item"))
-    if dtype in ("string", "binary"):
-        c = F.xxhash64(c)
-    return df.select(c.cast("long").alias("item"))
-
-
-def explode_tokens(df: DataFrame, tokens_col: str = "tokens", spread: bool = True) -> DataFrame:
+def explode_tokens(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """tokens array<int32> → one int64 ``item`` per token (Catalyst explode,
-    whole-stage codegen; no Python involved).
+    whole-stage codegen; no Python involved). An under-partitioned input is
+    spread as DOC rows first, ~100x fewer bytes than a post-explode shuffle.
 
-    ``spread``: when the input arrives under-partitioned (single local file),
-    repartition the DOC rows before exploding — moving ~100x fewer bytes
-    than a post-explode shuffle of raw tokens would. On a real multi-split
-    scan this is a no-op."""
-    if spread:
-        sc = df.sparkSession.sparkContext
-        if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            df = df.repartition(sc.defaultParallelism)
-    return df.select(F.explode(F.col(tokens_col)).alias("_t")).select(
+    Sketches do not need this: ``sketch(df, kernel, col="tokens")`` reads
+    the arrays directly, one Arrow row per document."""
+    docs, _ = spread_partitions(df)
+    return docs.select(F.explode(F.col(tokens_col)).alias("_t")).select(
         F.col("_t").cast("long").alias("item")
     )
 
@@ -100,8 +112,8 @@ def salted_repartition(df: DataFrame, key_col: str, salt_buckets: int = 16,
     rows spread over ``salt_buckets`` tasks (north-rule requirement).
 
     For SKETCH aggregation this is rarely needed — the map-side combine in
-    grouped_sketch_partials already collapses any per-partition key skew to
-    one state — but exact aggregations (counts, joins) over a hot key need
+    sketch_partials already collapses any per-partition key skew to one
+    state — but exact aggregations (counts, joins) over a hot key need
     it, and it also spreads a pathological input placement before stage 1.
     The salt uses a deterministic hash of a per-row sequence, not rand(),
     so replays are stable.
@@ -129,106 +141,153 @@ def salted_exact_counts(df: DataFrame, key_col: str, salt_buckets: int = 16) -> 
     return partial.groupBy(key_col).agg(F.sum("_c").cast("long").alias("count"))
 
 
-def sketch_array_partials(
-    df: DataFrame,
-    kernel: SketchKernel,
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """Stage 1 over an ARRAY column: one Arrow row per document, token
-    arrays flattened inside numpy.
-
-    vs exploding first: the JVM never materializes per-token rows and Arrow
-    transfers one list cell per doc instead of ~n_tok rows — measured ~15%
-    faster on 100-token docs (token payload dominates; row overhead is the
-    smaller term). Values are flattened per batch with np.concatenate and
-    fed to the kernel in one call.
-    """
-    proj = df.select(F.col(tokens_col).alias("tokens"))
-    sc = proj.sparkSession.sparkContext
-    nparts = proj.rdd.getNumPartitions()
-    if nparts < sc.defaultParallelism:
-        nparts = sc.defaultParallelism
-        proj = proj.repartition(nparts)
-    np_dtype = np.float64 if getattr(kernel, "input_dtype", "int64") == "float64" else np.int64
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = kernel.empty()
-        saw = False
-        for pdf in batches:
-            cells = [
-                np.asarray(c) for c in pdf["tokens"].to_numpy() if c is not None and len(c)
-            ]
-            saw = saw or len(pdf) > 0
-            if not cells:
-                continue
-            vals = np.concatenate(cells)
-            kernel.update(state, vals.astype(np_dtype, copy=False))
-        if saw:
-            ctx = TaskContext.get()
-            gid = ctx.partitionId() if ctx is not None else 0
-            yield pd.DataFrame({"gid": [gid], "sketch": [kernel.pack(state)]})
-
-    out = proj.mapInPandas(build, schema=_PARTIAL_SCHEMA)
-    # the partial count is the stage-1 partition count, already known here;
-    # recording it saves tree_merge a driver-side RDD conversion of the
-    # mapInPandas plan (measured ~0.5 s of pure planning per sketch call)
-    out._ceef_nparts = nparts  # type: ignore[attr-defined]
-    return out
-
-
-def sketch_tokens(
-    df: DataFrame,
-    kernel: SketchKernel,
-    tokens_col: str = "tokens",
-    fanout: int = 32,
-) -> State:
-    """Full pipeline over the canonical pre-tokenized table: token arrays →
-    merged sketch state, no explode."""
-    return tree_merge(sketch_array_partials(df, kernel, tokens_col), kernel, fanout)
-
-
 def sketch_partials(
     df: DataFrame,
     kernel: SketchKernel,
     col: str = "item",
     input_partitions: int | None = None,
+    key_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Stage 1: one packed partial state per input partition."""
-    items = items_column(df, col, getattr(kernel, "input_dtype", "int64"))
-    nparts = items.rdd.getNumPartitions()
-    if input_partitions:
-        items = items.repartition(input_partitions)
-        nparts = input_partitions
-    elif nparts < (default_par := items.sparkSession.sparkContext.defaultParallelism):
-        # a 100 TB scan arrives with thousands of splits; a local single-file
-        # read arrives with one — spread it so stage 1 uses every core
-        items = items.repartition(default_par)
-        nparts = default_par
+    """Stage 1, the only builder: one packed partial per (input partition,
+    key) — per input partition when ``key_cols`` is empty.
 
-    np_dtype = np.float64 if getattr(kernel, "input_dtype", "int64") == "float64" else np.int64
+    Output rows are ``(key_cols... | gid, sketch, rows)``; ``rows`` counts
+    the non-NULL items folded into the state. ``col`` may be scalar or
+    ``array<…>``; see the module docstring for the dtype, NULL and
+    partitioning contract.
+    """
+    key_cols = list(key_cols)
+    float_kernel = getattr(kernel, "input_dtype", "int64") == "float64"
+    np_dtype = np.float64 if float_kernel else np.int64
+    dtype = df.schema[col].dataType
+    is_array = isinstance(dtype, ArrayType)
+    elem = dtype.elementType if is_array else dtype
+    if float_kernel:
+        conv = lambda x: x.cast("double")  # noqa: E731
+    elif isinstance(elem, (StringType, BinaryType)):
+        conv = lambda x: F.xxhash64(x)  # noqa: E731
+    else:
+        conv = lambda x: x.cast("long")  # noqa: E731
+    c = F.col(col)
+    if not is_array:
+        df = df.where(c.isNotNull())
+        item = conv(c)
+    elif isinstance(elem, (StringType, BinaryType)) or (
+        not float_kernel and isinstance(elem, LongType) and dtype.containsNull
+    ):
+        # hashed strings and 64-bit ids would be rounded by the float64 that
+        # Arrow hands numpy for a batch with a NULL element: these element
+        # types drop NULLs (and hash) in the JVM instead
+        item = F.transform(F.filter(c, lambda x: x.isNotNull()), conv)
+    else:
+        # the token path: numeric arrays cross Arrow as they are
+        item = c
+    # the value keeps its name, so an array passed as is needs no Project
+    proj, nparts = spread_partitions(
+        df.select(*key_cols, item.alias(col)), input_partitions
+    )
+    out_schema = StructType(
+        ([proj.schema[k] for k in key_cols] or [StructField("gid", LongType())])
+        + [StructField("sketch", BinaryType()), StructField("rows", LongType())]
+    )
+
+    def items(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray | None]:
+        """A batch's non-NULL values and, for keyed arrays, each value's row."""
+        if not is_array:
+            return pdf[col].to_numpy(dtype=np_dtype), None
+        cells = pdf[col].to_numpy()
+        full = [c for c in cells if c is not None and len(c)]
+        if not full:
+            return np.zeros(0, dtype=np_dtype), None
+        vals = np.concatenate(full)
+        owner = None
+        if key_cols:
+            lens = [0 if c is None else len(c) for c in cells]
+            owner = np.repeat(np.arange(len(cells)), lens)
+        if vals.dtype.kind == "f":
+            # NULL elements arrive as NaN; an int array is float only when
+            # its batch holds one, so the token path never pays this scan
+            ok = ~np.isnan(vals)
+            if not ok.all():
+                vals = vals[ok]
+                owner = owner[ok] if owner is not None else None
+        return vals.astype(np_dtype, copy=False), owner
+
+    def groups(pdf: pd.DataFrame, vals: np.ndarray, owner: np.ndarray | None):
+        """(key tuple, values) per group present in the batch."""
+        if not len(vals):
+            return
+        if not key_cols:
+            yield (), vals
+            return
+        # each key column is coded alone (use_na_sentinel=False keeps a NULL
+        # key as a group of its own) and the codes are combined pairwise,
+        # re-factorized so they stay below the row count
+        codes = None
+        for k in key_cols:
+            kc, uniq = pd.factorize(pdf[k], sort=False, use_na_sentinel=False)
+            codes = kc if codes is None else pd.factorize(codes * len(uniq) + kc)[0]
+        if owner is not None:
+            codes = codes[owner]
+        order = np.argsort(codes, kind="stable")
+        bounds = np.flatnonzero(np.diff(codes[order])) + 1
+        rows = order if owner is None else owner[order]  # batch row per value
+        keyvals = [pdf[k].to_numpy() for k in key_cols]
+        for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(order)]):
+            key = tuple(kv[rows[s]] for kv in keyvals)
+            # NaN/NaT NULL keys become None so every batch hits one entry
+            yield tuple(v if v == v else None for v in key), vals[order[s:e]]
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = kernel.empty()
-        saw = False
+        states: dict[tuple, list] = {}
         for pdf in batches:
-            vals = pdf["item"].to_numpy(dtype=np_dtype, na_value=0)
-            kernel.update(state, vals)
-            saw = True
-        if saw:
-            ctx = TaskContext.get()
-            gid = ctx.partitionId() if ctx is not None else 0
-            yield pd.DataFrame({"gid": [gid], "sketch": [kernel.pack(state)]})
+            for key, part in groups(pdf, *items(pdf)):
+                entry = states.get(key)
+                if entry is None:
+                    entry = states[key] = [kernel.empty(), 0]
+                entry[0] = kernel.update(entry[0], part)
+                entry[1] += len(part)
+        if states:
+            if key_cols:
+                out = {k: [key[i] for key in states] for i, k in enumerate(key_cols)}
+            else:
+                ctx = TaskContext.get()
+                out = {"gid": [ctx.partitionId() if ctx is not None else 0]}
+            out["sketch"] = [kernel.pack(st) for st, _ in states.values()]
+            out["rows"] = [n for _, n in states.values()]
+            yield pd.DataFrame(out)
 
-    out = items.mapInPandas(build, schema=_PARTIAL_SCHEMA)
-    # known stage-1 partition count — saves tree_merge an RDD conversion
+    out = proj.mapInPandas(build, schema=out_schema)
+    # the partial count is bounded by the stage-1 partition count, known
+    # here; recording it saves tree_merge a driver-side RDD conversion of
+    # the mapInPandas plan (measured ~0.5 s of pure planning per call)
     out._ceef_nparts = nparts  # type: ignore[attr-defined]
     return out
 
 
-def _merge_fn(kernel: SketchKernel):
+def sketch_array_partials(
+    df: DataFrame, kernel: SketchKernel, tokens_col: str = "tokens"
+) -> DataFrame:
+    """``sketch_partials`` over an array column."""
+    return sketch_partials(df, kernel, tokens_col)
+
+
+def grouped_sketch_partials(
+    df: DataFrame, kernel: SketchKernel, key_cols: list[str], col: str
+) -> DataFrame:
+    """``sketch_partials`` with group keys."""
+    return sketch_partials(df, kernel, col, key_cols=key_cols)
+
+
+def _merge_fn(kernel: SketchKernel, key_cols: list[str]):
+    """The one merge: merge one key's packed states, sum their ``rows`` and
+    keep the key columns."""
+
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = kernel.merge_packed(list(pdf["sketch"]))
-        return pd.DataFrame({"gid": [int(pdf["gid"].iloc[0])], "sketch": [merged]})
+        out = pdf.iloc[[0]][key_cols].copy()
+        out["sketch"] = [kernel.merge_packed(list(pdf["sketch"]))]
+        out["rows"] = [int(pdf["rows"].sum())]
+        return out
 
     return merge
 
@@ -255,7 +314,7 @@ def tree_merge(
         cur = (
             cur.withColumn("gid", F.pmod(F.col("gid"), F.lit(width)))
             .groupBy("gid")
-            .applyInPandas(_merge_fn(kernel), schema=_PARTIAL_SCHEMA)
+            .applyInPandas(_merge_fn(kernel, ["gid"]), schema=partials.schema)
         )
         n = width
     # Arrow transfer for the final fetch: packed states are binary blobs
@@ -275,107 +334,35 @@ def sketch(
     input_partitions: int | None = None,
     fanout: int = 32,
 ) -> State:
-    """Full pipeline: df[col] → merged sketch state on the driver."""
+    """Full pipeline: df[col], scalar or array → merged sketch state on the
+    driver."""
     return tree_merge(
         sketch_partials(df, kernel, col, input_partitions), kernel, fanout
     )
+
+
+def sketch_tokens(
+    df: DataFrame,
+    kernel: SketchKernel,
+    tokens_col: str = "tokens",
+    fanout: int = 32,
+) -> State:
+    """``sketch`` over a token-array column."""
+    return sketch(df, kernel, tokens_col, fanout=fanout)
 
 
 # --------------------------------------------------------------------------
 # Grouped sketches: one sketch per key (e.g. per source / per campaign).
 # --------------------------------------------------------------------------
 
-def grouped_sketch_partials(
-    df: DataFrame, kernel: SketchKernel, key_cols: list[str], col: str
-) -> DataFrame:
-    """Map-side combine: per (input partition, key) partial states."""
-    dtype = dict(df.dtypes)[col]
-    item = F.col(col)
-    # mirror items_column's dtype contract exactly: float64 kernels
-    # (KLL/t-digest) take the raw values cast to double (a long cast would
-    # truncate; hashing strings would sketch hash values); id kernels hash
-    # strings JVM-side then go int64
-    in_dtype = getattr(kernel, "input_dtype", "int64")
-    if in_dtype == "float64":
-        # null items are dropped, not zero-filled (see items_column) — the
-        # keys of all-null groups then simply emit no partial, matching
-        # what a per-key quantile over the raw column would produce
-        proj = df.where(item.isNotNull()).select(
-            *key_cols, item.cast("double").alias("item")
-        )
-    else:
-        if dtype in ("string", "binary"):
-            item = F.xxhash64(item)
-        proj = df.select(*key_cols, item.cast("long").alias("item"))
-    default_par = proj.sparkSession.sparkContext.defaultParallelism
-    if proj.rdd.getNumPartitions() < default_par:
-        proj = proj.repartition(default_par)
-    out_schema = StructType(
-        [proj.schema[k] for k in key_cols]
-        + [StructField("sketch", BinaryType()), StructField("rows", LongType())]
-    )
-
-    np_dtype = np.float64 if in_dtype == "float64" else np.int64
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, State] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in batches:
-            vals = pdf["item"].to_numpy(dtype=np_dtype, na_value=0)
-            # vectorized per-key split: sort by key codes, slice runs
-            # (single-key fast path skips the MultiIndex build;
-            # use_na_sentinel=False keeps NULL keys as a real group — the
-            # bare factorize would code them -1, silently folding null-key
-            # rows into uniq[-1], i.e. the wrong key's sketch)
-            if len(key_cols) == 1:
-                codes, uniq = pd.factorize(
-                    pdf[key_cols[0]], sort=False, use_na_sentinel=False
-                )
-            else:
-                codes, uniq = pd.factorize(
-                    pd.MultiIndex.from_frame(pdf[key_cols]), sort=False
-                )
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            sorted_vals = vals[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sorted_codes)]))
-            for s, e in zip(starts, ends):
-                if s == e:
-                    continue
-                key = uniq[sorted_codes[s]]
-                key = key if isinstance(key, tuple) else (key,)
-                st = states.get(key)
-                if st is None:
-                    st = states[key] = kernel.empty()
-                    counts[key] = 0
-                kernel.update(st, sorted_vals[s:e])
-                counts[key] += e - s
-        if states:
-            rows = {k: [key[i] for key in states] for i, k in enumerate(key_cols)}
-            rows["sketch"] = [kernel.pack(st) for st in states.values()]
-            rows["rows"] = [counts[key] for key in states]
-            yield pd.DataFrame(rows)
-
-    return proj.mapInPandas(build, schema=out_schema)
-
-
 def grouped_sketch(
     df: DataFrame, kernel: SketchKernel, key_cols: list[str], col: str = "item"
 ) -> DataFrame:
-    """DataFrame of (key_cols..., sketch binary), one merged state per key."""
-    partials = grouped_sketch_partials(df, kernel, key_cols, col)
-    schema = partials.schema
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = kernel.merge_packed(list(pdf["sketch"]))
-        out = pdf.iloc[[0]][key_cols].copy()
-        out["sketch"] = [merged]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return out
-
-    return partials.groupBy(*key_cols).applyInPandas(merge, schema=schema)
+    """DataFrame of (key_cols..., sketch, rows), one merged state per key."""
+    partials = sketch_partials(df, kernel, col, key_cols=key_cols)
+    return partials.groupBy(*key_cols).applyInPandas(
+        _merge_fn(kernel, list(key_cols)), schema=partials.schema
+    )
 
 
 def grouped_estimate(

@@ -40,6 +40,9 @@ from cardinality_estimation_evaluation_framework_spark.hashing import (
     splitmix_offset,
     u64_to_i64_duckdb,
 )
+from cardinality_estimation_evaluation_framework_spark.operators.aggregate import (
+    spread_partitions,
+)
 from cardinality_estimation_evaluation_framework_spark.operators.text import (
     with_fingerprint,
 )
@@ -88,18 +91,6 @@ def unpersist_intermediates(df: DataFrame, blocking: bool = False) -> int:
         p.unpersist(blocking=blocking)
     df._ceef_persisted = []  # type: ignore[attr-defined]
     return len(persisted)
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the input arrives in fewer splits than
-    the cluster has slots (e.g. one small parquet file -> 1 task swallowing
-    the whole signature build). At scale inputs come in thousands of splits
-    and this no-ops; the repartition moves doc rows (1x text), never the
-    exploded grams (~3x text)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # --------------------------------------------------------------------------
@@ -261,8 +252,9 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
     gram_hash = md5_u64_spark if portable else F.xxhash64
     # gram STRING hashing on purpose: signature values (and est_jaccard)
     # are output-visible, so the hash family must stay what it was
+    # spread DOC rows (1x text) before the build, never the grams (~3x)
     doc_ghs = gram_hash_arrays(
-        _ensure_parallelism(docs), n,
+        spread_partitions(docs)[0], n,
         lambda wd, i: gram_hash(gram_at(wd, i, n)),
         text_col, id_col,
     )
@@ -618,7 +610,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     # values are bit-identical to the exploded form. `words` appears once
     # as the transform input, so it is evaluated once per row.
     ths = F.transform(words, lambda t: tok_hash(t))
-    doc_ths = _ensure_parallelism(docs).select(
+    doc_ths = spread_partitions(docs)[0].select(
         F.col(id_col).cast("string").alias("doc_id"), ths.alias("ths")
     )
 

@@ -87,15 +87,8 @@ class CheckpointedSketchBuild:
                 return self
             t0 = time.time()
             subset = bucketed.where(F.col("_ckpt_bucket").isin([int(b) for b in group]))
-            partials = agg.grouped_sketch_partials(
+            merged = agg.grouped_sketch(
                 subset, self.kernel, ["_ckpt_bucket"], self.col
-            )
-            merged = (
-                partials.groupBy("_ckpt_bucket")
-                .applyInPandas(
-                    _merge_group(self.kernel),
-                    schema="_ckpt_bucket int, sketch binary, rows long",
-                )
             )
             rows = merged.collect()  # <= buckets_per_job tiny rows
             wall_ms = int((time.time() - t0) * 1000)
@@ -134,18 +127,3 @@ class CheckpointedSketchBuild:
             by_bucket.setdefault(int(r["bucket"]), bytes(r["sketch"]))
         return self.kernel.unpack(self.kernel.merge_packed(list(by_bucket.values())))
 
-
-def _merge_group(kernel: SketchKernel):
-    import pandas as pd
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = kernel.merge_packed(list(pdf["sketch"]))
-        return pd.DataFrame(
-            {
-                "_ckpt_bucket": [int(pdf["_ckpt_bucket"].iloc[0])],
-                "sketch": [merged],
-                "rows": [int(pdf["rows"].sum())],
-            }
-        )
-
-    return fn

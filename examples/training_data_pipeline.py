@@ -106,8 +106,7 @@ def main() -> None:
         "reach": HllKernel(p=12, seed=1),
         "freq": CountMinKernel(width=4096, depth=4, seed=2),
     })
-    items = agg.explode_tokens(tk.tokenize_hashed(docs))
-    state = agg.sketch(items, suite)
+    state = agg.sketch(tk.tokenize_hashed(docs), suite, col="tokens")
     reach = HllKernel(p=12, seed=1).estimate(suite.child(state, "reach"))[0]
 
     # 5. per-source length quantiles from ONE grouped KLL job

@@ -87,3 +87,58 @@ def test_empty_input(spark):
     k = HllKernel(p=10, seed=0)
     state = agg.sketch(df, k)
     assert k.estimate(state)[0] == 0.0
+
+
+def test_grouped_sketch_two_null_keys(spark):
+    # each key column is coded on its own, so every (NULL | value) x
+    # (NULL | value) combination is its own group with its own rows
+    df = spark.range(24_000).select(
+        F.when(F.col("id") % 3 == 0, None)
+        .otherwise((F.col("id") % 3).cast("string"))
+        .alias("src"),
+        F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id") % 4).alias("lang"),
+        F.col("id").alias("item"),
+    )
+    k = HllKernel(p=12, seed=7)
+    sk = agg.grouped_sketch(df, k, ["src", "lang"], "item")
+    rows = {(r["src"], r["lang"]): r["rows"] for r in sk.collect()}
+    assert set(rows) == {(s, lang) for s in (None, "1", "2") for lang in (None, 1, 2, 3)}
+    assert set(rows.values()) == {2_000}
+    for r in agg.grouped_estimate(sk, k, ["src", "lang"], "estimate").collect():
+        assert abs(r["estimate"] - 2_000) / 2_000 < 0.05, r
+
+
+def test_null_items_are_dropped(spark):
+    # a NULL id is no id: not item 0, and not xxhash64(NULL) for strings
+    from cardinality_estimation_evaluation_framework_spark.sketches.countmin import (
+        CountMinKernel,
+    )
+
+    df = spark.range(1_000).select(
+        F.lit("s").alias("src"),
+        F.when(F.col("id") >= 100, F.col("id")).alias("item"),
+        F.when(F.col("id") >= 100, F.concat(F.lit("u"), F.col("id"))).alias("name"),
+    )
+    cm = CountMinKernel(width=4096, depth=4, seed=1)
+    zero = np.array([0], dtype=np.int64)
+    assert cm.query(agg.sketch(df, cm), zero)[0] == 0
+    (row,) = agg.grouped_sketch(df, cm, ["src"], "item").collect()
+    assert row["rows"] == 900
+    assert cm.query(cm.unpack(bytes(row["sketch"])), zero)[0] == 0
+
+    k = HllKernel(p=12, seed=2)
+    with_nulls = agg.sketch(df, k, col="name")
+    without = agg.sketch(df.where(F.col("name").isNotNull()), k, col="name")
+    assert (with_nulls["registers"] == without["registers"]).all()
+
+
+def test_spread_partitions_does_not_probe_a_given_count():
+    class Frame:
+        def repartition(self, n):
+            return ("repartitioned", n)
+
+        @property
+        def rdd(self):
+            raise AssertionError("probed the partition count")
+
+    assert agg.spread_partitions(Frame(), 3) == (("repartitioned", 3), 3)

@@ -1,8 +1,12 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cardinality_estimation_evaluation_framework_spark.operators import aggregate as agg
+from cardinality_estimation_evaluation_framework_spark.sketches.bloom import BloomKernel
+from cardinality_estimation_evaluation_framework_spark.sketches.countmin import CountMinKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import HllKernel
+from cardinality_estimation_evaluation_framework_spark.sketches.kll import KllKernel
 
 
 def _docs(spark, n_docs=5_000):
@@ -22,11 +26,81 @@ def test_array_path_matches_explode_path(spark):
 
 
 def test_array_path_handles_nulls_and_empties(spark):
+    # a NULL cell, an empty array and a NULL element are all skipped: the
+    # NULL element must not turn into an id of its own
     df = spark.createDataFrame(
-        [([1, 2, 3],), (None,), ([],), ([4],)],
+        [([1, 2, 3],), (None,), ([],), ([4],), ([None, 5],)],
         "tokens array<int>",
     )
     k = HllKernel(p=10, seed=1)
     st = agg.sketch_tokens(df, k)
-    exact = k.update(k.empty(), np.array([1, 2, 3, 4], dtype=np.int64))
+    exact = k.update(k.empty(), np.array([1, 2, 3, 4, 5], dtype=np.int64))
     assert (st["registers"] == exact["registers"]).all()
+
+
+def test_array_null_elements_keep_64_bit_ids(spark):
+    # bigint and string elements drop NULLs in the JVM: a float64 batch
+    # would round ids above 2^53, and xxhash64(NULL) is the seed, not NULL
+    big = [2**62 + 1, 2**62 + 3]
+    longs = spark.createDataFrame([([big[0], None],), ([big[1]],)], "tokens array<bigint>")
+    k = HllKernel(p=10, seed=1)
+    exact = k.update(k.empty(), np.array(big, dtype=np.int64))
+    assert (agg.sketch(longs, k, col="tokens")["registers"] == exact["registers"]).all()
+
+    strs = spark.createDataFrame([(["a", None],), (["b"],), (None,)], "tokens array<string>")
+    scalar = spark.createDataFrame([("a",), ("b",)], "tokens string")
+    assert (
+        agg.sketch(strs, k, col="tokens")["registers"]
+        == agg.sketch(scalar, k, col="tokens")["registers"]
+    ).all()
+
+
+KERNELS = {
+    "hll": lambda: HllKernel(p=10, seed=3),
+    "countmin": lambda: CountMinKernel(width=256, depth=3, seed=1),
+    "bloom": lambda: BloomKernel(dist_kind="exponential", m=1024, seed=2, decay_rate=10.0),
+    "kll": lambda: KllKernel(k=64, seed=5),
+}
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS))
+def test_array_scalar_and_keyed_states_are_byte_identical(spark, name):
+    """One builder: an array column, the same values exploded to a scalar
+    column, and either form under one constant key give the same packed
+    state in every stage-1 partition (NULL cells, NULL elements and empty
+    arrays included), and the same merged state."""
+    kernel = KERNELS[name]()
+    parts = spark.sparkContext.defaultParallelism  # no spread: same partitions
+    i_d = F.col("id")
+    toks = F.transform(
+        F.sequence(F.lit(0), i_d % 7),
+        lambda i: F.when((i_d + i) % 11 == 0, F.lit(None)).otherwise(
+            F.pmod(F.xxhash64(i_d, i), F.lit(1000)).cast("int")
+        ),
+    )
+    docs = spark.range(400, numPartitions=parts).select(
+        F.when(i_d % 37 == 0, F.lit(None))
+        .when(i_d % 29 == 0, F.array().cast("array<int>"))
+        .otherwise(toks)
+        .alias("v")
+    )
+    scalar = docs.select(F.explode("v").alias("v"))
+    forms = {
+        "array": (docs, []),
+        "scalar": (scalar, []),
+        "array+key": (docs.withColumn("k", F.lit("c")), ["k"]),
+        "scalar+key": (scalar.withColumn("k", F.lit("c")), ["k"]),
+    }
+    got = {
+        form: [
+            (bytes(r["sketch"]), r["rows"])
+            for r in agg.sketch_partials(frame, kernel, "v", key_cols=keys).collect()
+        ]
+        for form, (frame, keys) in forms.items()
+    }
+    assert got["array"] and sum(n for _, n in got["array"]) > 0
+    for form in forms:
+        assert got[form] == got["array"], form
+    assert kernel.pack(agg.sketch(docs, kernel, col="v")) == kernel.pack(
+        agg.sketch(scalar, kernel, col="v")
+    )

@@ -220,9 +220,9 @@ def test_grouped_quantile_sketches(spark):
 
 def test_quantile_kernels_drop_nulls(spark):
     """Null items must be DROPPED before a float64 kernel, not zero-filled:
-    a zero-filled Arrow transfer would drag low quantiles toward 0. Both
-    the ungrouped (items_column) and grouped (grouped_sketch_partials)
-    projections are checked against an all-positive distribution."""
+    a zero-filled Arrow transfer would drag low quantiles toward 0. The
+    ungrouped and grouped builds are checked against an all-positive
+    distribution."""
     from pyspark.sql import functions as F
 
     from cardinality_estimation_evaluation_framework_spark.operators import (
