@@ -84,27 +84,24 @@ def build_benchmark_bloom(bench_docs: DataFrame, n: int = 8,
                           text_col: str = "text",
                           id_col: str = "doc_id",
                           input_partitions: int | None = None) -> dict:
-    """Distributed Bloom build over the benchmark's distinct gram hashes
+    """Distributed Bloom build over the benchmark's gram hashes
     (mapInPandas partials + tree merge — the engine's standard harness).
     Returns the merged kernel state.
 
-    The distinct runs on the 8-byte gram hashes, never on gram strings
-    (the old shape shuffled ~5-word strings twice: a string distinct, then
-    a hash distinct). Partitioning note (measured): each partial carries
-    the FULL m-register state, so unlike the id-sketch builds this one
-    must NOT spread a small input to every core — 32 fat partials cost
-    more to merge than the build itself. Default: keep the input's own
-    partitioning, capped at 8; pass ``input_partitions`` explicitly for a
-    genuinely huge benchmark set."""
+    No distinct runs first: a Bloom insert is idempotent, so repeated
+    grams set the same bits, and the registers equal those of a build over
+    the distinct hashes (a counting kernel's registers would count
+    repeats, but the probe reads only ``registers > 0``). Partitioning note (measured): each partial carries
+    the FULL m-register state (32 MB of float64 on the driver at m = 4M),
+    so unlike the id-sketch builds this one must NOT spread a small input
+    to every core. Default: ONE stage-1 partial, with no probe of the
+    input's partition count; pass ``input_partitions`` for a genuinely huge
+    benchmark set."""
     kernel = kernel or bloom_kernel()
-    items = (
-        _gram_hash_arrays(bench_docs, n, text_col, id_col)
-        .select(F.explode("ghs").alias("item"))
-        .distinct()
+    items = _gram_hash_arrays(bench_docs, n, text_col, id_col).select(
+        F.explode("ghs").alias("item")
     )
-    if input_partitions is None:
-        input_partitions = max(1, min(8, items.rdd.getNumPartitions()))
-    return agg.sketch(items, kernel, input_partitions=input_partitions)
+    return agg.sketch(items, kernel, input_partitions=input_partitions or 1)
 
 
 def _pack_bits(state: dict, kernel: BloomKernel) -> np.ndarray:

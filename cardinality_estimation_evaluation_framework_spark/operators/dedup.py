@@ -286,38 +286,41 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
                 np.minimum.at(sigs[k], codes, hk)
             yield pd.DataFrame({"doc_id": uniq, "sig": list(sigs.T.copy())})
 
-    # partial per input partition, then min-merge per doc (mins are associative)
+    # partial per input partition, then min-merge per doc (mins are
+    # associative). The 64-way merge is ONE parsed SQL expression: built
+    # as Column objects it costs a py4j round trip per node (~0.4 s of
+    # driver planning per call), for the same optimized plan.
     partial = doc_ghs.mapInPandas(per_batch, schema="doc_id string, sig array<long>")
-    return partial.groupBy("doc_id").agg(
-        F.array(*[F.min(F.col("sig")[i]) for i in range(num_hashes)]).alias("sig")
-    )
+    merge = ", ".join(f"min(sig[{i}])" for i in range(num_hashes))
+    return partial.groupBy("doc_id").agg(F.expr(f"array({merge})").alias("sig"))
 
 
 def _band_signatures(signatures: DataFrame, bands: int, rows_per_band: int,
                      portable: bool) -> DataFrame:
     """(doc_id, band, bucket): one row per signature band. Shared by the
     full (:func:`minhash_lsh_candidates`) and incremental paths so both
-    bucket identically."""
-    def bucket_col(b):
-        cols = [F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
+    bucket identically.
+
+    The explode is built as ONE parsed SQL expression rather than ~100
+    Column objects (a py4j round trip each, ~0.5 s of driver planning per
+    call); the optimized plan is the same."""
+    def bucket(b):
+        cols = ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
         if portable:
             # the DuckDB twin reproduces this exact comma-joined string
-            return F.concat_ws(",", *cols)
+            return f"concat_ws(',', {cols})"
         # production: hash the band's long values directly (xxhash64 chains
         # inputs seed-wise) — no per-band string build. Buckets encode the
         # same tuple-equality as the string form, and every candidate is
         # re-verified by exact signature agreement, so pairs are unchanged
         # (modulo hash collisions, as before).
-        return F.xxhash64(*cols)
+        return f"xxhash64({cols})"
 
+    structs = ", ".join(
+        f"struct({b} AS band, {bucket(b)} AS bucket)" for b in range(bands)
+    )
     return signatures.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), bucket_col(b).alias("bucket"))
-                for b in range(bands)
-            ])
-        ).alias("bb"),
+        "doc_id", F.expr(f"explode(array({structs}))").alias("bb")
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
@@ -364,9 +367,13 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8, num_hashes: int
     ``persist=True`` caches the O(docs x 64-long) signature table
     (MEMORY_AND_DISK) because it is consumed 3x (banding, both verify
     sides) plus the hot-bucket count — the expensive gram-hash kernel then
-    runs once. Lifetime note: the cache lives until LRU eviction; repeat
-    invocations with identical inputs share one entry (Spark dedups by
-    canonicalized plan). Pass ``persist=False`` to recompute instead."""
+    runs once. It caches the verified pairs too, so a caller that collects
+    them and then clusters them (:func:`connected_components`) does not
+    re-run the band, self-join, distinct and verify joins. Lifetime note:
+    both caches live until LRU eviction or :func:`unpersist_intermediates`
+    (which releases both); repeat invocations with identical inputs share
+    one entry (Spark dedups by canonicalized plan). Pass ``persist=False``
+    to recompute instead."""
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(docs, num_hashes, n, seed, portable=portable)
     persisted = []
@@ -392,6 +399,9 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8, num_hashes: int
         .where(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
+    if persist:
+        out = out.persist()
+        persisted.append(out)
     return _attach_persisted(out, persisted)
 
 
@@ -924,6 +934,36 @@ def embedding_near_dup_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
 # connected components: near-dup PAIRS -> dup CLUSTERS -> dedup'd corpus
 # --------------------------------------------------------------------------
 
+# Oriented edges (two per pair) up to which connected_components labels the
+# graph on the driver; see its docstring for the sizing.
+_CC_DRIVER_MAX_EDGES = 400_000
+
+
+def _cc_label_on_driver(a: np.ndarray, b: np.ndarray, max_iter: int):
+    """The distributed rounds below, in numpy over the oriented edge
+    arrays: (node ids, rep ids, rounds, round_secs). Nodes are coded by
+    ``np.unique`` (sorted, so the min code is the min id), then each round
+    takes the min over each node's own and neighbor labels and pointer-
+    jumps, until no label changes."""
+    nodes, codes = np.unique(np.concatenate([a, b]), return_inverse=True)
+    src, dst = codes[: len(a)], codes[len(a):]
+    label = np.arange(len(nodes))
+    round_secs: list[tuple[float, float]] = []
+    for rounds in range(1, max_iter + 1):
+        t0 = time.time()
+        new = label.copy()
+        np.minimum.at(new, src, label[dst])
+        new = new[new]  # pointer jump
+        changed = np.count_nonzero(new != label)
+        label = new
+        round_secs.append((time.time() - t0, 0.0))
+        if changed == 0:
+            return nodes, nodes[label], rounds, round_secs
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(raise max_iter)")
+
+
 def connected_components(pairs: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b", max_iter: int = 25) -> DataFrame:
     """(doc_id, rep): connected components over an undirected pair list,
@@ -933,25 +973,34 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
 
     Algorithm: minimum-label propagation. Each node starts labeled with
     itself; every iteration each node takes the min of its own label and
-    its neighbors' labels (one groupBy-min over the edge-joined labels);
-    converges in O(component diameter) rounds — near-dup clusters are
-    shallow (stars/cliques around a template), so typically 3-5 rounds.
+    its neighbors' labels, then POINTER-JUMPS (label := label[label]):
+    path doubling turns O(diameter) convergence into O(log diameter), so
+    even chain-shaped components (the worst case for plain propagation)
+    converge in ~log2(n) rounds — pinned by the 300-node chain test.
+    ``max_iter`` bounds pathological cases; hitting it raises rather than
+    returning a half-converged clustering. The rounds used and their
+    (propagate+jump, count) seconds are exposed on the result as
+    ``_cc_rounds`` and ``_cc_round_secs``.
 
-    Scale posture: per iteration, ONE equi-join (edges x labels, shuffle
-    keyed on node id — both sides hash-partitioned the same way, and AQE
-    broadcasts the label side while it is small) + one groupBy-min with
-    map-side combine, then a POINTER-JUMP (label := label[label], one
-    label self-join): path doubling turns O(diameter) convergence into
-    O(log diameter), so even chain-shaped components (the worst case for
-    plain propagation) converge in ~log2(n) rounds — pinned by the
-    300-node chain test. Edges are persisted across iterations; labels
-    are localCheckpoint()ed each round so the iterative lineage never
-    deepens (no exponential re-execution, no stack-overflow plans — the
-    same pattern GraphX uses). Convergence is detected with a count of
-    changed labels (O(1) result per round). ``max_iter`` bounds
-    pathological cases; hitting it raises rather than returning a
-    half-converged clustering. The rounds actually used are exposed on
-    the result as ``_cc_rounds``.
+    Small graphs (the common case: near-dup pairs are a sliver of the
+    corpus) are solved on the DRIVER. The oriented edges are persisted,
+    and at most ``_CC_DRIVER_MAX_EDGES + 1`` of them are fetched through
+    Arrow: one Spark job, plus one in which AQE fills the edge cache when
+    the input is not a local relation. If they all fit, the rounds run in
+    numpy and the labels come back as a one-partition local DataFrame. The
+    cap (200k pairs) keeps the
+    driver's copy of the id strings to tens of MB, small next to driver
+    memory, while every distributed round costs two Spark jobs of
+    scheduling and planning however tiny the graph is.
+
+    Above the cap, the rounds run distributed over the same cached edges:
+    per round, ONE equi-join (edges x labels, shuffle keyed on node id —
+    AQE broadcasts the label side while it is small) + one groupBy-min
+    with map-side combine, then the pointer jump as one label self-join.
+    Labels are localCheckpoint()ed each round so the iterative lineage
+    never deepens (no exponential re-execution, no stack-overflow plans —
+    the same pattern GraphX uses). Convergence is detected with a count of
+    changed labels (O(1) result per round).
     """
     p = (
         pairs.select(F.col(src).cast("string").alias("a"),
@@ -970,6 +1019,20 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
             F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
         )).alias("e")
     ).select("e.a", "e.b").persist()
+    head = edges.limit(_CC_DRIVER_MAX_EDGES + 1).toPandas()
+    if len(head) <= _CC_DRIVER_MAX_EDGES:
+        edges.unpersist()
+        nodes, reps, rounds, round_secs = _cc_label_on_driver(
+            head["a"].to_numpy(), head["b"].to_numpy(), max_iter)
+        # one partition: the labels are driver-sized, and a count or
+        # groupBy over them then needs no shuffle
+        out = pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"doc_id": nodes, "rep": reps}),
+            "doc_id string, rep string").coalesce(1)
+        out._cc_rounds = rounds  # type: ignore[attr-defined]
+        out._cc_round_secs = round_secs  # type: ignore[attr-defined]
+        return out
+    del head  # the distributed rounds below read the cached edges
     labels = None  # the identity map, never materialized (see round 1)
     rounds = 0
     round_secs: list[tuple[float, float]] = []  # (propagate+jump, count)

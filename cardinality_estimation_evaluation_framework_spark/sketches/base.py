@@ -33,9 +33,10 @@ _MAGIC = b"CEEF2"
 # aggregation harness shuffles and collects, so their wire size directly
 # bounds shuffle bytes and the driver fetch (a 64-partition suite build
 # collects 64 states). Two lossless encodings cover the fat cases:
-#   tag 1: float64 registers whose values are exactly {0, 1} (crisp OR
-#          registers — classic/ADBF Bloom before noising) -> bit-packed,
-#          64x smaller. Noised/fractional states fall through to raw.
+#   tag 1: float64 registers whose values are exactly {+0.0, 1.0} (crisp
+#          OR registers — classic/ADBF Bloom before noising) -> bit-packed,
+#          64x smaller. Noised/fractional states, and any holding -0.0
+#          (which would decode as +0.0), fall through to raw.
 #   tag 2: int64 tables whose values fit a narrower int (count-min partial
 #          counts, legion counters) -> downcast, 2-8x smaller. The original
 #          dtype travels alongside so decode restores it exactly.
@@ -48,7 +49,7 @@ _ENCODE_MIN_SIZE = 1024
 def _write_array(buf: io.BytesIO, arr: np.ndarray) -> None:
     arr = np.ascontiguousarray(arr)
     if arr.size >= _ENCODE_MIN_SIZE and arr.dtype == np.float64:
-        if ((arr == 0.0) | (arr == 1.0)).all():
+        if ((arr == 0.0) | (arr == 1.0)).all() and not np.signbit(arr).any():
             buf.write(bytes([_TAG_BITS]))
             np.save(buf, np.asarray(arr.shape, dtype=np.int64),
                     allow_pickle=False)

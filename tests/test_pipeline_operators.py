@@ -328,7 +328,8 @@ def test_unpersist_intermediates_releases_cache(docs_small):
         docs_small.limit(10), threshold=0.9, num_hashes=16, bands=4
     )
     pairs.count()
-    assert dedup.unpersist_intermediates(pairs) == 1
+    # the signatures and the verified pairs
+    assert dedup.unpersist_intermediates(pairs) == 2
     assert dedup.unpersist_intermediates(pairs) == 0  # idempotent
 
 
@@ -442,6 +443,39 @@ def test_connected_components_hot_node_star(spark):
     assert len(rows) == 1 and rows[0]["count"] == n  # hub + n-1 leaves
     assert rows[0]["rep"] == "hub"  # "hub" < "leaf_*" lexicographically
     assert cc._cc_rounds <= 4, cc._cc_rounds
+
+
+@pytest.mark.parametrize("graph_test", [
+    test_connected_components_known_graph,
+    test_connected_components_matches_duckdb_closure,
+    test_connected_components_chain_log_rounds,
+    test_connected_components_hot_node_star,
+], ids=["known_graph", "duckdb_closure", "chain", "hot_star"])
+def test_connected_components_distributed_rounds(spark, monkeypatch, graph_test):
+    """The four graph tests above run under the default driver cap, so
+    they label on the driver; with the cap at 0 the same graphs take the
+    distributed rounds."""
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    graph_test(spark)
+
+
+def test_connected_components_small_graph_runs_one_job(spark):
+    """Under the cap, a local input clusters in one Spark job: the Arrow
+    fetch of the edges. The labels come back as a local frame."""
+    pairs = spark.createDataFrame(
+        [(str(i), str(i + 1)) for i in range(50)] + [("x", "y")],
+        "doc_a string, doc_b string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-small-graph", "cc-small-graph")
+    try:
+        cc = dedup.connected_components(pairs)
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-small-graph")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 1, jobs
+    reps = {r["doc_id"]: r["rep"] for r in cc.collect()}
+    assert reps == {**{str(i): "0" for i in range(51)}, "x": "x", "y": "x"}
 
 
 def test_dedup_keep_representatives(docs_small):
@@ -634,6 +668,42 @@ def test_decontam_exact_and_bloom(docs_small):
     for d, er in exact.items():
         if int(d) % 7 == 0:
             assert er["n_hits"] == er["n_grams"] and er["contaminated"], d
+
+
+def test_bloom_build_skips_distinct_and_partition_probe(spark, monkeypatch):
+    """Bloom inserts are idempotent, so building over every gram hash,
+    repeats included, gives the registers of the distinct-then-probe
+    build byte for byte; the build makes no getNumPartitions() probe."""
+    from cardinality_estimation_evaluation_framework_spark.operators import (
+        aggregate as agg,
+        decontam,
+    )
+
+    phrase = "the quick brown fox jumps over the lazy dog"
+    bench = spark.createDataFrame(
+        [(f"b{i}", f"{phrase} {phrase} extra{i % 3} {phrase}") for i in range(12)],
+        "doc_id string, text string",
+    ).repartition(3)
+    kernel = decontam.bloom_kernel(m=1 << 16, k=3, seed=5)
+    n = 4
+    items = (
+        decontam._gram_hash_arrays(bench, n, "text", "doc_id")
+        .select(F.explode("ghs").alias("item"))
+    )
+    distinct = items.distinct()
+    assert items.count() > distinct.count()  # grams repeat
+    want = agg.sketch(
+        distinct, kernel,
+        input_partitions=max(1, min(8, distinct.rdd.getNumPartitions())),
+    )
+
+    def probe(self):
+        raise AssertionError("probed the partition count")
+
+    monkeypatch.setattr(type(bench), "rdd", property(probe))
+    got = decontam.build_benchmark_bloom(bench, n=n, kernel=kernel)
+    assert got["registers"].tobytes() == want["registers"].tobytes()
+    assert got["registers"].any()
 
 
 def test_decontam_exact_matches_duckdb(docs_small):

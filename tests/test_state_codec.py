@@ -64,6 +64,18 @@ def test_codec_boundary_values_downcast_exactly():
         np.testing.assert_array_equal(back, arr)
 
 
+def test_codec_keeps_signed_zeros():
+    # -0.0 == 0.0, so a 0/1 register array holding -0.0 passes the value
+    # test of the bit-pack; it must still decode with its sign bit (compare
+    # bytes: assert_array_equal treats -0.0 and +0.0 as equal)
+    arr = np.zeros(4096, dtype=np.float64)
+    arr[::3] = 1.0
+    arr[1::7] = -0.0
+    back = _roundtrip({"x": arr})["x"]
+    assert back.tobytes() == arr.tobytes()
+    assert np.signbit(back).sum() == np.signbit(arr).sum() > 0
+
+
 def test_codec_reads_legacy_ceef1():
     spec = {"type": "legacy"}
     arr = np.random.RandomState(3).randint(0, 1000, size=(4, 64)).astype(np.int64)

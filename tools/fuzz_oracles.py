@@ -10,10 +10,13 @@ package is parameterized, so this is a driver loop: each trial derives
 its config and its corpus deterministically from (master_seed, trial).
 
 Usage:
-    python tools/fuzz_oracles.py [n_trials] [master_seed]
+    python tools/fuzz_oracles.py [n_trials] [master_seed] [families]
 
 Prints one line per trial (family, params digest, OK/MISMATCH) and a
 summary; exit 1 on any mismatch. Writes FUZZ.json with the full record.
+``families`` is a comma-separated subset of the FAMILIES names (e.g.
+``connected_components,minhash_lsh,minhash_incremental``); the trials then
+cycle through that subset only, and FUZZ.json is left as it is.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ import json
 import random
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
@@ -786,13 +790,18 @@ FAMILIES = [
 ]
 
 
-def run(n_trials: int, master_seed: int, spark=None) -> dict:
+def run(n_trials: int, master_seed: int, spark=None,
+        families: list[str] | None = None) -> dict:
+    unknown = set(families or ()) - {name for name, _ in FAMILIES}
+    if unknown:
+        raise ValueError(f"unknown fuzz families: {sorted(unknown)}")
+    fams = [f for f in FAMILIES if families is None or f[0] in families]
     spark = spark or get_spark("fuzz-oracles", cores=8)
     results = []
     failures = 0
     t_start = time.time()
     for trial in range(n_trials):
-        fam_name, fam = FAMILIES[trial % len(FAMILIES)]
+        fam_name, fam = fams[trial % len(fams)]
         rng = random.Random(f"{master_seed}|{trial}")
         con = duckdb.connect()
         t0 = time.time()
@@ -821,11 +830,13 @@ def run(n_trials: int, master_seed: int, spark=None) -> dict:
 def main() -> int:
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 60
     master_seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260817
-    summary = run(n_trials, master_seed)
-    with open("/root/repo/FUZZ.json", "w") as fh:
-        json.dump(summary, fh, indent=1)
+    families = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+    summary = run(n_trials, master_seed, families=families)
+    if families is None:
+        with open(Path(__file__).resolve().parent.parent / "FUZZ.json", "w") as fh:
+            json.dump(summary, fh, indent=1)
     print(f"FUZZ: {summary['n_trials']} trials, {summary['failures']} failures, "
-          f"{summary['total_sec']}s -> FUZZ.json")
+          f"{summary['total_sec']}s" + ("" if families else " -> FUZZ.json"))
     return 1 if summary["failures"] else 0
 
 
