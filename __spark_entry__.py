@@ -533,7 +533,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine retrieval above a threshold for a fixed query
-    vector (the ANN baseline; LSH/IVF variants are pytest-verified)."""
+    vector."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = _query_vector(spark, sf_dir)
     return sim_ops.brute_force_threshold(emb, q, threshold=0.35)

@@ -4,8 +4,8 @@ Re-expression of the reference's generator family (ref:
 src/simulations/set_generator.py, frequency_set_generator.py). All generators
 are driver-side numpy (set sizes in the reference's evaluation scenarios are
 <= 1e7, vs the distributed token tables which are the engine's real input) —
-the Spark surface is ``sets_to_items_df`` / ``sets_to_tokens_df``, which turn
-a generated scenario into the engine's canonical tables.
+the Spark surface is ``sets_to_items_df``, which turns a generated scenario
+into the engine's canonical (source, item) table.
 
 Determinism: every generator takes a ``np.random.RandomState``; the
 evaluator derives one per scenario so all estimators see identical data
@@ -374,22 +374,3 @@ def sets_to_items_df(spark: SparkSession, sets: list[np.ndarray],
     pdf = pd.concat(frames, ignore_index=True)
     df = spark.createDataFrame(pdf)
     return df.repartition(partitions) if partitions else df
-
-
-def sets_to_tokens_df(spark: SparkSession, sets: list[np.ndarray],
-                      tokens_per_doc: int = 64) -> DataFrame:
-    """Scenario → canonical pre-tokenized table
-    (doc_id string, tokens array<int>, n_tok int, source string)."""
-    import pandas as pd
-
-    rows = []
-    for i, ids in enumerate(sets):
-        ids = np.asarray(ids, dtype=np.int64)
-        for d, lo in enumerate(range(0, len(ids), tokens_per_doc)):
-            chunk = ids[lo : lo + tokens_per_doc]
-            rows.append(
-                (f"set{i:04d}_doc{d:06d}", chunk.astype(np.int32).tolist(),
-                 len(chunk), f"set_{i:04d}")
-            )
-    pdf = pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source"])
-    return spark.createDataFrame(pdf, schema="doc_id string, tokens array<int>, n_tok int, source string")

@@ -21,7 +21,7 @@ shared SQL fragments live in ``TOKENS_CTE_DUCKDB`` / ``tokens_cte_spark``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -43,10 +43,6 @@ vocab AS (
   FROM (SELECT DISTINCT tok FROM toks)
 )
 """
-
-
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def tokens_exploded(docs: DataFrame) -> DataFrame:

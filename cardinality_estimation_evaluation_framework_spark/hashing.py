@@ -11,10 +11,11 @@ public, deterministic alternatives with the same statistical contract
 - Spark's JVM-side ``xxhash64`` for hashing arbitrary columns before they
   enter a Python kernel (strings never cross into Python unhashed).
 
-For DuckDB-oracle parity queries we additionally define a *portable* hash
-``(a*x + b) mod p`` with p = 2^31 - 1 that is expressible in both Spark SQL
-and DuckDB SQL without 64-bit overflow (ANSI-safe), so sketch register
-tables can be compared value-for-value against a pure-SQL oracle.
+For DuckDB-oracle parity queries the portable kernels
+(``PortableHllKernel`` and the portable count-min / vector-of-counts modes)
+use ``(a*x + b) mod p`` with p = 2^31 - 1, expressible in both Spark SQL and
+DuckDB SQL without 64-bit overflow (ANSI-safe), so sketch register tables
+can be compared value-for-value against a pure-SQL oracle.
 
 If the real ``farmhash`` package is importable, ``farmhash_or_none`` exposes
 it so parity tests against the reference can run bit-exact; otherwise those
@@ -31,7 +32,6 @@ except ImportError:  # pragma: no cover
     _farmhash = None
 
 MAX_HASH_VALUE = 2**64 - 1  # ref: hash_function.py:19
-MERSENNE_31 = 2**31 - 1
 
 _U64 = np.uint64
 
@@ -78,25 +78,6 @@ def bit_length_u64(w: np.ndarray) -> np.ndarray:
     _, e_hi = np.frexp(hi.astype(np.float64))
     _, e_lo = np.frexp(lo.astype(np.float64))
     return np.where(hi != 0, e_hi + 32, e_lo).astype(np.int64)
-
-
-def leading_zeros_in_window(w: np.ndarray, window_bits: int) -> np.ndarray:
-    """Number of leading zeros of ``w`` interpreted as a window_bits-wide int."""
-    return window_bits - bit_length_u64(w)
-
-
-def portable_hash_expr(col: str, a: int, b: int) -> str:
-    """SQL text of the portable hash, valid in Spark SQL *and* DuckDB.
-
-    h(x) = (a*x + b) mod (2^31-1), requires 0 <= x < 2^31 and a,b < 2^31-1
-    so a*x + b < 2^62 (no bigint overflow under ANSI mode).
-    """
-    return f"(({a} * CAST({col} AS BIGINT) + {b}) % {MERSENNE_31})"
-
-
-def portable_hash_np(x: np.ndarray, a: int, b: int) -> np.ndarray:
-    """Numpy twin of :func:`portable_hash_expr` (int64, exact)."""
-    return (a * x.astype(np.int64) + b) % MERSENNE_31
 
 
 def derive_seeds(random_seed: int, n: int) -> np.ndarray:

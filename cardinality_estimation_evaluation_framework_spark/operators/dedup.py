@@ -15,7 +15,7 @@ Scale design (100 TB posture):
   within LSH buckets on signature chunks.
 - embedding cosine: exact all-pairs join for the gate/verification;
   embedding_near_dup_pairs_lsh (banded hyperplanes -> equi-join -> exact
-  re-rank) is the scale path; query-centric ANN lives in similarity.py.
+  re-rank) is the scale path; query-centric top-k lives in similarity.py.
 - every LSH candidate join caps degenerate hot buckets (boilerplate text /
   duplicate-heavy embeddings) so no bucket can go quadratic.
 
@@ -789,7 +789,7 @@ FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= {max_hamming}
 
 
 # --------------------------------------------------------------------------
-# embedding-cosine near-dup (exact pair form; ANN path in similarity.py)
+# embedding-cosine near-dup (exact pair form + banded-LSH pair form)
 # --------------------------------------------------------------------------
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,

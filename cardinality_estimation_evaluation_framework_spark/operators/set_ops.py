@@ -4,15 +4,11 @@ These operate on merged sketch STATES (tiny vectors) on the driver — the
 distributed layer builds one sketch per operand set; the set algebra itself
 is elementwise numpy (ref files: bloom_filter_sketch_operators.py,
 vector_of_counts_sketch_operator.py, stratified_sketch.py:26-68).
-
-Exact DataFrame set ops (union/intersect/except on id columns) are provided
-for the truth side.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 from cardinality_estimation_evaluation_framework_spark.sketches.base import State
 from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
@@ -159,19 +155,3 @@ class VocSetOperator:
         if that is None:
             return {"stats": this["stats"].copy()}
         return {"stats": this["stats"] - that["stats"]}
-
-
-# --------------------------------------------------------------------------
-# Exact DataFrame set ops (ref: stratified_sketch.py:33-68 ExactSetOperator)
-# --------------------------------------------------------------------------
-
-def exact_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.union(b).distinct()
-
-
-def exact_intersection(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.distinct().intersect(b.distinct())
-
-
-def exact_difference(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.distinct().exceptAll(b.distinct())

@@ -3,18 +3,13 @@
 - brute-force cosine top-k: the exact baseline — JVM-side zip_with /
   aggregate arithmetic, one scan + window top-k (or threshold filter for
   deterministic output sets).
-- LSH-bucketed ANN (random hyperplanes): the scale path — b seeded
-  hyperplane signs → bucket key; query probes its bucket (+ optional
-  multi-probe neighbors); candidates re-ranked exactly. Turns the O(N)
-  scan into a bucket lookup; recall tested against brute force in pytest.
-- IVF-style variant: k seeded centroids (deterministic kmeans-lite),
-  partition-pruned by nearest-centroid assignment.
+- seeded random hyperplanes (``_hyperplanes``), shared with the
+  embedding near-dup LSH in ``dedup.py``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from cardinality_estimation_evaluation_framework_spark.hashing import splitmix64
@@ -72,7 +67,7 @@ def brute_force_threshold(emb: DataFrame, query: list[float], threshold: float,
 
 
 # --------------------------------------------------------------------------
-# LSH (random hyperplane) ANN
+# random hyperplanes (embedding near-dup LSH in dedup.py)
 # --------------------------------------------------------------------------
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -84,82 +79,3 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     u1 = np.clip(u1, 1e-12, 1.0)
     g = np.sqrt(-2 * np.log(u1)) * np.cos(2 * np.pi * u2)
     return g.reshape(n_planes, dim)
-
-
-def with_lsh_bucket(emb: DataFrame, n_planes: int = 12, seed: int = 7,
-                    vec_col: str = "embedding") -> DataFrame:
-    """Add a hyperplane-sign bucket column via one Arrow kernel (matrix
-    multiply per batch)."""
-    dim = len(emb.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf("long")
-    def bucket(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy())
-        signs = (mat @ planes.T) > 0
-        powers = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series((signs @ powers).astype(np.int64))
-
-    return emb.withColumn("lsh_bucket", bucket(F.col(vec_col)))
-
-
-def lsh_topk(emb_with_bucket: DataFrame, query: list[float], k: int = 10,
-             n_planes: int = 12, seed: int = 7, multiprobe: int = 1,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN: probe the query's bucket (+ hamming-1 neighbors when
-    multiprobe>0), re-rank exactly. Bucket filter partition-prunes when the
-    table is written partitioned/bucketed by lsh_bucket."""
-    dim = len(query)
-    planes = _hyperplanes(dim, n_planes, seed)
-    q = np.asarray(query, dtype=np.float64)
-    qb = int(((planes @ q) > 0) @ (1 << np.arange(n_planes, dtype=np.int64)))
-    probes = [qb]
-    if multiprobe:
-        probes += [qb ^ (1 << i) for i in range(n_planes)]
-    cands = emb_with_bucket.where(F.col("lsh_bucket").isin(probes))
-    return brute_force_topk(cands, query, k, id_col, vec_col)
-
-
-# --------------------------------------------------------------------------
-# IVF-style coarse quantizer
-# --------------------------------------------------------------------------
-
-def ivf_assign(emb: DataFrame, n_centroids: int = 16, seed: int = 3,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               sample_rows: int = 2048) -> tuple[DataFrame, np.ndarray]:
-    """Deterministic IVF: centroids = seeded sample refined by 5 Lloyd
-    iterations on the driver (coarse quantizer is small by design), then a
-    vectorized nearest-centroid assignment. Returns (df + ivf_cell, centroids)."""
-    sample = np.stack(
-        [np.asarray(r[0], dtype=np.float64) for r in
-         emb.select(vec_col).limit(sample_rows).collect()]
-    )
-    rng = np.random.RandomState(seed)
-    cents = sample[rng.choice(len(sample), n_centroids, replace=False)]
-    for _ in range(5):
-        d = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-
-    @F.pandas_udf("int")
-    def cell(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy())
-        d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    return emb.withColumn("ivf_cell", cell(F.col(vec_col))), cents
-
-
-def ivf_topk(emb_with_cell: DataFrame, centroids: np.ndarray, query: list[float],
-             k: int = 10, n_probe: int = 2, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Search the n_probe nearest cells only, re-rank exactly."""
-    q = np.asarray(query, dtype=np.float64)
-    d = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    cells = [int(c) for c in d.argsort()[:n_probe]]
-    return brute_force_topk(
-        emb_with_cell.where(F.col("ivf_cell").isin(cells)), query, k, id_col, vec_col
-    )

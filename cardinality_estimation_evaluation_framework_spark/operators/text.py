@@ -1,9 +1,7 @@
 """Text analysis operators for large-scale training-data pipelines.
 
 All hot-path operators are pure Catalyst column expressions (whole-stage
-codegen, no Python); the rolling-hash fingerprint offers both a JVM-side
-variant (xxhash64 of the normalized text) and a true polynomial rolling
-hash as an Arrow-vectorized pandas UDF for byte-level control.
+codegen, no Python).
 
 Language ID is an n-gram/stopword-ratio heuristic: per-language stopword
 regex hit counts normalized by token count, argmax with a deterministic
@@ -13,8 +11,6 @@ tie-break — expressible identically in ANSI SQL for the DuckDB oracle
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 # tiny per-language stopword sets (public common-word lists)
@@ -266,64 +262,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def fingerprint_sql(text_col: str = "text") -> str:
     return f"md5(trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g')))"
-
-
-def with_rolling_fingerprint(df: DataFrame, text_col: str = "text",
-                             window: int = 16) -> DataFrame:
-    """Polynomial rolling-hash fingerprint (winnowing-style min over all
-    window hashes) — the byte-level control path the Catalyst md5 variant
-    can't express.
-
-    Fully vectorized across the batch: every window of every document in an
-    Arrow batch is hashed by ONE Horner loop of ``window`` (=16) vectorized
-    steps over a flat byte array, then per-doc mins come from one
-    ``minimum.reduceat``. No per-document or per-window Python loops.
-    Hash: Horner mod p = 2^31-1 with base 1000003 (products stay < 2^52,
-    exact in int64)."""
-
-    @F.pandas_udf("long")
-    def rolling_fp(texts: pd.Series) -> pd.Series:
-        base = np.int64(1_000_003)
-        p = np.int64(2**31 - 1)
-        enc = texts.fillna("").str.encode("utf-8", "ignore")
-        lens = enc.str.len().to_numpy(np.int64)
-        out = np.zeros(len(enc), dtype=np.int64)
-        if lens.sum() == 0:
-            return pd.Series(out)
-        allb = np.frombuffer(b"".join(enc.tolist()), dtype=np.uint8).astype(np.int64)
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-
-        # full-length docs: hash every window with one vectorized Horner loop
-        n_win = np.maximum(lens - window + 1, 0)
-        total = int(n_win.sum())
-        if total:
-            doc_bounds = np.concatenate(([0], np.cumsum(n_win)))
-            # global byte offset of each window start, across all docs
-            offs = (np.repeat(starts, n_win)
-                    + np.arange(total) - np.repeat(doc_bounds[:-1], n_win))
-            h = np.zeros(total, dtype=np.int64)
-            for t in range(window):
-                h = (h * base + allb[offs + t]) % p
-            has = n_win > 0
-            mins = np.minimum.reduceat(h, doc_bounds[:-1][has])
-            out[has] = mins
-
-        # short docs (< window bytes): Horner over the whole string, same
-        # vectorized loop with a validity mask
-        short = (lens > 0) & (lens < window)
-        if short.any():
-            s_start, s_len = starts[short], lens[short]
-            hs = np.zeros(len(s_start), dtype=np.int64)
-            for t in range(window - 1):
-                m = t < s_len
-                if not m.any():
-                    break
-                hs[m] = (hs[m] * base + allb[s_start[m] + t]) % p
-            out[short] = hs
-
-        return pd.Series(out)
-
-    return df.withColumn("rolling_fp", rolling_fp(F.col(text_col)))
 
 
 def _dup_frac(arr: Column) -> Column:

@@ -16,6 +16,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the machine's MemTotal in whole GB (at least ``1g``), the
+    driver heap used unless $SPARK_DRIVER_MEMORY is set. A fixed heap larger
+    than the box lets the JVM grow until the kernel's OOM killer stops it.
+    Without a readable meminfo the floor is used."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "1g"
+    return f"{max(1, kib // 2 // (1 << 20))}g"
+
+
 def get_spark(
     app_name: str = "ceef_spark",
     cores: int | None = None,
@@ -44,7 +58,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         # ignored in local[*] mode; sized for local-cluster executors
         .config("spark.executor.memory", os.environ.get("SPARK_EXECUTOR_MEMORY", "4g"))
         # local-cluster executors spawn their own Python workers which don't

@@ -46,20 +46,6 @@ def widen_num_estimable_sets(metric_df: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def boxplot_relative_errors(raw_df: pd.DataFrame, out_png: str,
-                            relative_error_col: str = "relative_error_1") -> str | None:
-    """Per-num_sets boxplot (ref: plotting.py:21-43); None if no matplotlib."""
-    if not HAVE_MPL:
-        return None
-    fig, ax = plt.subplots(figsize=(12, 6))
-    raw_df.boxplot(column=relative_error_col, by="num_sets", ax=ax)
-    ax.set_xlabel("number of sets")
-    ax.set_ylabel("relative error")
-    fig.savefig(out_png)
-    plt.close(fig)
-    return out_png
-
-
 def barplot_frequency_distributions(long_df: pd.DataFrame, out_png: str,
                                     frequency_col: str = "frequency_level",
                                     cardinality_col: str = "cardinality",

@@ -150,10 +150,6 @@ def fold_sum(registers: np.ndarray, idx: np.ndarray) -> None:
     np.add.at(registers, idx, 1)
 
 
-def fold_sum_weighted(registers: np.ndarray, idx: np.ndarray, w: np.ndarray) -> None:
-    np.add.at(registers, idx, w)
-
-
 def fold_unique_key(registers: np.ndarray, idx: np.ndarray, keys: np.ndarray) -> None:
     """UniqueKeyFunction lattice, batch-vectorized.
 

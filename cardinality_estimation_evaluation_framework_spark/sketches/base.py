@@ -26,6 +26,12 @@ import numpy as np
 
 State = dict[str, np.ndarray]
 
+
+class IncompatibleSketchError(ValueError):
+    """A packed state was built with a different kernel spec than the one
+    merging or estimating it (other type, precision, seed or version)."""
+
+
 _MAGIC_V1 = b"CEEF1"
 _MAGIC = b"CEEF2"
 
@@ -173,7 +179,8 @@ class SketchKernel(ABC):
         spec, state = unpack_state(raw)
         mine = self.spec()
         if spec != mine:
-            raise AssertionError(f"incompatible sketch states: {spec} != {mine}")
+            raise IncompatibleSketchError(
+                f"incompatible sketch states: {spec} != {mine}")
         return state
 
     def merge_packed(self, raws: list[bytes]) -> bytes:

@@ -1,12 +1,9 @@
 """Exact multiset + Lossless/LessOne estimators — the truth oracle.
 
-Two forms:
-- DataFrame form (the scalable one): frequency histograms via groupBy —
-  ``freq = count per id``, ``h[k] = #ids with freq >= k`` (reversed cumsum),
-  matching LosslessEstimator output (ref: exact_set.py:69-98).
-- Kernel form (driver/simulator scale): id->count dict as parallel arrays,
-  mergeable; used by the Simulator as the per-run truth exactly like the
-  reference keeps a running ExactMultiSet (ref: simulator.py:182-196).
+An id->count dict as parallel arrays, mergeable; used by the Simulator as
+the per-run truth exactly like the reference keeps a running ExactMultiSet
+(ref: simulator.py:182-196). ``h[k] = #ids with freq >= k`` matches
+LosslessEstimator output (ref: exact_set.py:69-98).
 """
 
 from __future__ import annotations
@@ -14,7 +11,6 @@ from __future__ import annotations
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
 
 from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     SketchKernel,
@@ -81,38 +77,3 @@ def less_one_estimate(states: list[State], max_freq: int | None = None) -> list[
     """Lossless minus one per level — harness error-detection fixture
     (ref: exact_set.py:101-113)."""
     return [x - 1 for x in lossless_estimate(states, max_freq)]
-
-
-# --------------------------------------------------------------------------
-# DataFrame (distributed) form
-# --------------------------------------------------------------------------
-
-def frequency_table(df: DataFrame, id_col: str = "item") -> DataFrame:
-    """(id, freq) — one shuffle, map-side partial counts via hash agg."""
-    return df.groupBy(id_col).agg(F.count("*").alias("freq"))
-
-
-def frequency_histogram_df(
-    df: DataFrame, id_col: str = "item", max_freq: int | None = None
-) -> DataFrame:
-    """(freq, n_ids) histogram; tiny output (<= max observed freq rows)."""
-    ft = frequency_table(df, id_col)
-    freq = F.least(F.col("freq"), F.lit(max_freq)) if max_freq else F.col("freq")
-    return ft.select(freq.alias("freq")).groupBy("freq").agg(
-        F.count("*").alias("n_ids")
-    )
-
-
-def kplus_reach_df(
-    df: DataFrame, id_col: str = "item", max_freq: int = 10
-) -> DataFrame:
-    """(k, kplus_reach) for k = 1..max_freq — LosslessEstimator's cumulative
-    output as a DataFrame: reversed cumsum over the tiny histogram via a
-    window (cheap: runs on <= max_freq rows)."""
-    hist = frequency_histogram_df(df, id_col, max_freq)
-    ks = df.sparkSession.range(1, max_freq + 1).select(F.col("id").alias("k"))
-    return (
-        hist.join(ks, hist.freq >= ks.k)
-        .groupBy("k")
-        .agg(F.sum("n_ids").cast("long").alias("kplus_reach"))
-    )

@@ -22,9 +22,11 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
 
 class SuiteKernel(SketchKernel):
     def __init__(self, kernels: dict[str, SketchKernel]):
-        assert kernels, "empty suite"
+        if not kernels:
+            raise ValueError("empty suite")
         for name in kernels:
-            assert "::" not in name, "suite child names cannot contain '::'"
+            if "::" in name:
+                raise ValueError(f"suite child names cannot contain '::': {name!r}")
         self.kernels = dict(kernels)
 
     def spec(self) -> dict[str, Any]:

@@ -4,9 +4,9 @@ from cardinality_estimation_evaluation_framework_spark.hashing import (
     bit_length_u64,
     derive_seeds,
     hash64,
-    portable_hash_np,
     splitmix64,
 )
+from cardinality_estimation_evaluation_framework_spark.sketches.hll import PortableHllKernel
 
 
 def test_bit_length_exact():
@@ -33,10 +33,16 @@ def test_hash64_uniformity():
 
 
 def test_portable_hash_matches_python():
+    """PortableHllKernel's inline (a*x + b) mod (2^31-1) hash, which its
+    register SQL repeats for the DuckDB oracle, equals Python's exact int
+    arithmetic: each value lands in register h % m."""
     x = np.array([0, 1, 17, 2**31 - 2], dtype=np.int64)
     a, b = 1103515245, 12345
     expect = [(a * int(v) + b) % (2**31 - 1) for v in x]
-    assert portable_hash_np(x, a, b).tolist() == expect
+    k = PortableHllKernel(p=4, a=a, b=b)
+    for v, h in zip(x, expect):
+        regs = k.update(k.empty(), np.array([v]))["registers"]
+        assert np.flatnonzero(regs).tolist() == [h % k.m]
 
 
 def test_derive_seeds_stable():

@@ -1,6 +1,7 @@
 import numpy as np
 import pytest
 
+from cardinality_estimation_evaluation_framework_spark.sketches.base import IncompatibleSketchError
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import (
     HllKernel,
     PortableHllKernel,
@@ -57,7 +58,7 @@ def test_pack_unpack_roundtrip():
 
 def test_incompatible_states_raise():
     k1, k2 = HllKernel(p=10, seed=2), HllKernel(p=11, seed=2)
-    with pytest.raises(AssertionError):
+    with pytest.raises(IncompatibleSketchError):
         k1.unpack(k2.pack(k2.empty()))
 
 

@@ -59,8 +59,6 @@ def test_fingerprints(spark):
     fps = {r["doc_id"]: r["fingerprint"] for r in out}
     assert fps["1"] == fps["2"]  # normalization collapses case/whitespace
     assert fps["1"] != fps["3"]
-    rolled = text.with_rolling_fingerprint(df, window=4).collect()
-    assert all(r["rolling_fp"] is not None for r in rolled)
 
 
 # ---------------- dedup ----------------
@@ -551,24 +549,6 @@ def test_brute_force_topk(emb):
     assert len(top) == 5
     assert abs(top[0]["cosine"] - 1.0) < 1e-4  # the query vector itself
     assert [r["rank"] for r in top] == [1, 2, 3, 4, 5]
-
-
-def test_lsh_topk_recall(emb):
-    q = list(emb.select("embedding").first()[0])
-    exact = {r["vec_id"] for r in similarity.brute_force_topk(emb, q, k=10).collect()}
-    # 4 planes = 16 buckets over ~500 vectors: bucket granularity matched to
-    # corpus size (at 100 TB you'd use 16+ planes; recall scales with probes)
-    bucketed = similarity.with_lsh_bucket(emb, n_planes=4, seed=7)
-    approx = {r["vec_id"] for r in similarity.lsh_topk(bucketed, q, k=10, n_planes=4, seed=7).collect()}
-    assert len(exact & approx) >= 5  # recall@10 >= 0.5 with multiprobe
-
-
-def test_ivf_topk_recall(emb):
-    q = list(emb.select("embedding").first()[0])
-    exact = {r["vec_id"] for r in similarity.brute_force_topk(emb, q, k=10).collect()}
-    with_cell, cents = similarity.ivf_assign(emb, n_centroids=8, seed=3)
-    approx = {r["vec_id"] for r in similarity.ivf_topk(with_cell, cents, q, k=10, n_probe=3).collect()}
-    assert len(exact & approx) >= 5
 
 
 # ---------------- multimodal ----------------

@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cardinality_estimation_evaluation_framework_spark.operators import aggregate as agg
@@ -51,3 +52,11 @@ def test_suite_pack_roundtrip_and_spark(spark):
         assert (np.asarray(st[key]) == np.asarray(st2[key])).all()
     hll_est = suite.kernels["hll"].estimate(suite.child(st, "hll"))[0]
     assert abs(hll_est - 30_000) / 30_000 < 0.05
+
+
+def test_suite_rejects_empty_and_namespaced_children():
+    # ValueError, not assert: the guards must survive ``python -O``
+    with pytest.raises(ValueError, match="empty suite"):
+        SuiteKernel({})
+    with pytest.raises(ValueError, match="::"):
+        SuiteKernel({"a::b": HllKernel(p=10)})
