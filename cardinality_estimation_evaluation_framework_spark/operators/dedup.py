@@ -16,8 +16,10 @@ Scale design (100 TB posture):
 - embedding cosine: exact all-pairs join for the gate/verification;
   embedding_near_dup_pairs_lsh (banded hyperplanes -> equi-join -> exact
   re-rank) is the scale path; query-centric top-k lives in similarity.py.
-- every LSH candidate join caps degenerate hot buckets (boilerplate text /
-  duplicate-heavy embeddings) so no bucket can go quadratic.
+- every candidate join (MinHash, SimHash, embedding LSH, winnowing; full
+  and incremental) is one :func:`_bucket_pairs`, which caps degenerate hot
+  buckets (boilerplate text / duplicate-heavy embeddings) so no bucket can
+  go quadratic.
 
 Everything below the signature computation is built-in DataFrame ops so
 Catalyst plans the joins; signatures themselves are Arrow-vectorized numpy
@@ -26,6 +28,8 @@ Catalyst plans the joins; signatures themselves are Arrow-vectorized numpy
 
 from __future__ import annotations
 
+import functools
+import operator
 import time
 
 import numpy as np
@@ -67,6 +71,45 @@ def _cap_hot_buckets(df: DataFrame, keys: list[str], max_bucket_size: int) -> Da
         .select(*keys)
     )
     return df.join(hot, keys, "left_anti")
+
+
+def _bucket_pairs(rows: DataFrame, keys: list[str], max_bucket_size: int,
+                  carry: tuple[str, ...] = (),
+                  new_col: str | None = None) -> DataFrame:
+    """The candidate stage of every near-dup family: cap the hot buckets of
+    ``rows`` (one row per doc_id and bucket ``keys``), then self-join on
+    ``keys``. Returns one row per (pair, shared bucket) as ``(doc_a, doc_b,
+    {c}_a..., {c}_b...)`` for each ``carry`` column, with doc_a < doc_b;
+    the caller adds its own ``distinct()`` or per-pair count.
+
+    ``new_col`` names a boolean column marking the new rows of an
+    incremental run. Only new rows probe, so old×old pairs never form; the
+    probe keeps ``a < b``, or ``a > b`` against an old ``b``, so each pair
+    with a new side comes out once per shared bucket. The cap still counts
+    old ∪ new, so its decisions match a full run."""
+    rows = _cap_hot_buckets(rows, keys, max_bucket_size)
+    a, b = rows.alias("a"), rows.alias("b")
+    ida, idb = F.col("a.doc_id"), F.col("b.doc_id")
+    if new_col is None:
+        pair, lo, hi = ida < idb, ida, idb
+    else:
+        a = rows.where(F.col(new_col)).alias("a")
+        pair = (ida < idb) | (~F.col(f"b.{new_col}") & (ida > idb))
+        lo, hi = F.least(ida, idb), F.greatest(ida, idb)
+
+    def side(c: str, x: str, y: str):
+        col = F.col(f"{x}.{c}")
+        if new_col is None:
+            return col
+        return F.when(ida < idb, col).otherwise(F.col(f"{y}.{c}"))
+
+    on = functools.reduce(
+        operator.and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    return a.join(b, on & pair).select(
+        lo.alias("doc_a"), hi.alias("doc_b"),
+        *[side(c, "a", "b").alias(f"{c}_a") for c in carry],
+        *[side(c, "b", "a").alias(f"{c}_b") for c in carry],
+    )
 
 
 def _attach_persisted(df: DataFrame, persisted: list[DataFrame]) -> DataFrame:
@@ -342,18 +385,27 @@ def minhash_lsh_candidates(signatures: DataFrame, bands: int = 16,
     so the DuckDB twin can reproduce it; production hashes it to a long to
     shrink shuffle rows."""
     banded = _band_signatures(signatures, bands, rows_per_band, portable)
-    if max_bucket_size is not None:
-        banded = _cap_hot_buckets(banded, ["band", "bucket"], max_bucket_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    return _bucket_pairs(banded, ["band", "bucket"], max_bucket_size).distinct()
+
+
+def _verify_signatures(cands: DataFrame, sigs: DataFrame, num_hashes: int,
+                       threshold: float) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard) of the candidate pairs whose signature
+    agreement rate, an unbiased Jaccard estimate, reaches ``threshold``."""
+    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
+    agree = F.size(
+        F.filter(
+            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    ) / F.lit(num_hashes)
+    return (
+        cands.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn("est_jaccard", F.round(agree, 6))
+        .where(F.col("est_jaccard") >= threshold)
+        .select("doc_a", "doc_b", "est_jaccard")
     )
 
 
@@ -384,21 +436,7 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8, num_hashes: int
         sigs, bands, rows_per_band,
         max_bucket_size=max_bucket_size, portable=portable,
     )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(num_hashes)
-    out = (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", F.round(agree, 6))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
-    )
+    out = _verify_signatures(cands, sigs, num_hashes, threshold)
     if persist:
         out = out.persist()
         persisted.append(out)
@@ -427,12 +465,13 @@ def minhash_dedup_pairs_incremental(new_docs: DataFrame,
     pairs_full(old) ∪ incremental(new, sigs(old)).
 
     Scale posture: the expensive gram-hash/min-scatter kernel runs over
-    the new docs only; the candidate equi-join keys its LEFT side by the
-    (small) new-doc banded table, so members of an old×old bucket never
-    pair with each other; the hot-bucket cap is counted over the UNION
-    banded table so cap decisions match the full run; signature-verify
-    joins fetch only docs that appear in a candidate. doc_ids must be
-    unique across old ∪ new (append-only contract).
+    the new docs only; the candidate join (:func:`_bucket_pairs` with
+    ``new_col``) probes with the (small) new-doc banded rows only, so
+    members of an old×old bucket never pair with each other; the
+    hot-bucket cap is counted over the UNION banded table so cap
+    decisions match the full run; signature-verify joins fetch only docs
+    that appear in a candidate. doc_ids must be unique across old ∪ new
+    (append-only contract).
     """
     rows_per_band = num_hashes // bands
     new_sigs = minhash_signatures(new_docs, num_hashes, n, seed,
@@ -450,40 +489,10 @@ def minhash_dedup_pairs_incremental(new_docs: DataFrame,
         _band_signatures(new_sigs, bands, rows_per_band, portable)
         .withColumn("is_new", F.lit(True))
     )
-    if max_bucket_size is not None:
-        banded_all = _cap_hot_buckets(
-            banded_all, ["band", "bucket"], max_bucket_size
-        )
-    a = banded_all.where("is_new").alias("a")
-    b = banded_all.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = all_sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = all_sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(num_hashes)
-    out = (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", F.round(agree, 6))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
-    )
+    cands = _bucket_pairs(
+        banded_all, ["band", "bucket"], max_bucket_size, new_col="is_new"
+    ).distinct()
+    out = _verify_signatures(cands, all_sigs, num_hashes, threshold)
     return _attach_persisted(out, persisted)
 
 
@@ -702,25 +711,10 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
             ])
         ).alias("cv"),
     ).select("doc_id", "simhash", "cv.chunk", "cv.val")
-    if max_bucket_size is not None:
-        chunks = _cap_hot_buckets(chunks, ["chunk", "val"], max_bucket_size)
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    cand = _bucket_pairs(
+        chunks, ["chunk", "val"], max_bucket_size, carry=("simhash",)
+    ).distinct()
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     out = cand.withColumn("hamming", hamming).where(
         F.col("hamming") <= max_hamming
     ).select("doc_a", "doc_b", "hamming")
@@ -887,22 +881,12 @@ def embedding_near_dup_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
     # Now: distinct (vec_a, vec_b) candidates first — 16-byte rows, one
     # dot per pair — then two vid-keyed joins pull v/nrm back for the
     # exact re-rank, moving each vector once per surviving candidate.
-    e = base.select("vid", F.posexplode("bks").alias("band", "bucket"))
-    if max_bucket_size is not None:
-        e = _cap_hot_buckets(e, ["band", "bucket"], max_bucket_size)
-    a, b = e.alias("a"), e.alias("b")
+    e = base.select(F.col("vid").alias("doc_id"),
+                    F.posexplode("bks").alias("band", "bucket"))
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(
-            F.col("a.vid").alias("vec_a"),
-            F.col("b.vid").alias("vec_b"),
-        )
+        _bucket_pairs(e, ["band", "bucket"], max_bucket_size)
         .distinct()
+        .toDF("vec_a", "vec_b")
     )
     va = base.select(
         F.col("vid").alias("vec_a"), F.col("v").alias("_va"),
@@ -1536,11 +1520,11 @@ def winnow_near_dup_pairs(docs: DataFrame, k: int = 3, w: int = 4,
     randomness — and carries winnowing's guarantee: any pair sharing a
     run of >= k+w-1 words shares at least one fingerprint.
 
-    Scale posture (100 TB): identical to the LSH candidate joins —
-    distinct (doc, fp) shuffles on 8-byte fps, degenerate hot
-    fingerprints (boilerplate) dropped by :func:`_cap_hot_buckets`
-    before the self-join so a fingerprint shared by H docs costs at
-    most min(H, cap)^2 pairs.
+    Scale posture (100 TB): the LSH candidate join (:func:`_bucket_pairs`)
+    on fingerprints — distinct (doc, fp) shuffles on 8-byte fps,
+    degenerate hot fingerprints (boilerplate) dropped before the
+    self-join so a fingerprint shared by H docs costs at most
+    min(H, cap)^2 pairs.
     """
     from cardinality_estimation_evaluation_framework_spark.operators.text import (
         winnow_fingerprints,
@@ -1551,13 +1535,9 @@ def winnow_near_dup_pairs(docs: DataFrame, k: int = 3, w: int = 4,
         .select("doc_id", "fp")
         .distinct()
     )
-    fps = _cap_hot_buckets(fps, ["fp"], max_bucket_size)
-    a, b = fps.alias("a"), fps.alias("b")
     return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"),
-                 F.col("b.doc_id").alias("doc_b"))
+        _bucket_pairs(fps, ["fp"], max_bucket_size)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
@@ -1611,10 +1591,12 @@ def winnow_near_dup_pairs_incremental(new_docs: DataFrame,
 
     Scale posture: the expensive per-doc fingerprint selection runs over
     the new docs only; the hot-fingerprint cap is counted over the UNION
-    table so cap decisions match the full run; the candidate join keys
-    its left side by the (small) new-doc fingerprints so an old×old
-    fingerprint bucket never pairs internally. doc_ids must be unique
-    across old ∪ new (append-only contract).
+    table so cap decisions match the full run; only the (small) new-doc
+    fingerprints probe the candidate join (:func:`_bucket_pairs` with
+    ``new_col``), so an old×old fingerprint bucket never pairs
+    internally. doc_ids must be unique across old ∪ new (append-only
+    contract), and ``existing_fps`` must be distinct: each row counts
+    as one shared fingerprint.
     """
     from cardinality_estimation_evaluation_framework_spark.operators.text import (
         winnow_fingerprints,
@@ -1633,24 +1615,10 @@ def winnow_near_dup_pairs_incremental(new_docs: DataFrame,
     all_fps = existing_fps.select("doc_id", "fp").withColumn(
         "is_new", F.lit(False)
     ).unionByName(new_fps.withColumn("is_new", F.lit(True)))
-    if max_bucket_size is not None:
-        all_fps = _cap_hot_buckets(all_fps, ["fp"], max_bucket_size)
-    a = all_fps.where("is_new").alias("a")
-    b = all_fps.alias("b")
-    # (new, new) pairs arrive from both sides of the join — normalize to
-    # (min, max) and distinct per fp before counting shared fingerprints
+    # each pair with a new side comes out once per shared fingerprint, so
+    # the per-pair count is the shared-fingerprint count with no distinct
     out = (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-            F.col("a.fp").alias("fp"),
-        )
-        .distinct()
+        _bucket_pairs(all_fps, ["fp"], max_bucket_size, new_col="is_new")
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)

@@ -45,14 +45,6 @@ class CountMinKernel(SketchKernel):
         if portable and depth > len(_PORTABLE_AB):
             raise ValueError(f"portable mode supports depth <= {len(_PORTABLE_AB)}")
 
-    @classmethod
-    def from_error(cls, eps: float, delta: float, seed: int = 0) -> "CountMinKernel":
-        return cls(
-            width=int(math.ceil(math.e / eps)),
-            depth=int(math.ceil(math.log(1 / delta))),
-            seed=seed,
-        )
-
     def spec(self) -> dict[str, Any]:
         return {
             "type": "countmin",

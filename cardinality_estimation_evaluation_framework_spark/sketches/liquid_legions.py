@@ -307,9 +307,6 @@ class Sampler:
         self.venn_cardinalities = self.venn()
         self.flip_p = np.array([float(s["noise"][0]) for s in states])
 
-    def _combo_transition(self) -> np.ndarray:
-        return self.venn.transition_matrix().T  # [observed, true] row lookup
-
     def _venn_priors(self) -> np.ndarray:
         """Matrix [register, combination] of priors (ref: :478-500; the k=1
         and k=2 closed forms are the reference's — the general path below

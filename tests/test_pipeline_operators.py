@@ -187,6 +187,38 @@ def test_winnow_incremental_equals_full_recompute(spark):
     assert not any(a not in new_ids and b not in new_ids for a, b, _ in inc)
 
 
+def test_bucket_pairs_incremental_emits_once_and_caps_on_union(spark):
+    """The shared candidate stage in incremental mode: old×old pairs never
+    form, each pair with a new side comes out once per shared key, a
+    bucket over the cap on its old rows alone still drops its new row,
+    and the incremental winnow plan needs no (doc_a, doc_b, fp) distinct."""
+    import re
+    from collections import Counter
+    old, new = ["b", "d", "f", "g", "h", "i"], ["a", "c", "e"]
+    buckets = {1: ["b", "d", "c"], 2: ["b", "c", "a"],
+               3: ["f", "g", "h", "i", "e"]}  # 3: four old rows > cap 3
+    rows = [(d, k, d in new, d + "!") for k, ds in buckets.items() for d in ds]
+    df = spark.createDataFrame(rows, "doc_id string, k int, is_new boolean, tag string")
+    got = dedup._bucket_pairs(df, ["k"], 3, carry=("tag",), new_col="is_new").collect()
+    assert Counter((r["doc_a"], r["doc_b"]) for r in got) == Counter(
+        {("b", "c"): 2, ("c", "d"): 1, ("a", "c"): 1, ("a", "b"): 1})
+    assert all(r["tag_a"] == r["doc_a"] + "!" and r["tag_b"] == r["doc_b"] + "!"
+               for r in got)
+    assert not any(a in old and b in old for a, b, *_ in got)
+
+    docs = spark.createDataFrame([("1", "a b c d e f"), ("2", "a b c d e g")],
+                                 "doc_id string, text string")
+    index = (text.winnow_fingerprints(docs.where("doc_id = '1'"))
+             .select("doc_id", "fp").distinct())
+    plan = dedup.winnow_near_dup_pairs_incremental(
+        docs.where("doc_id = '2'"), index, persist=False
+    )._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(doc_a#\d+, doc_b#\d+, \d+\)", plan)
+    # no (doc_a, doc_b, fp) distinct: neither its Exchange nor, where the
+    # fp-keyed join already clusters the rows, its HashAggregates
+    assert not re.search(r"doc_a#\d+, doc_b#\d+, fp#", plan)
+
+
 def test_winnow_incremental_duckdb_twin(spark):
     """Incremental winnow vs the full-pipeline DuckDB twin with the
     new-docs predicate — pins the new-keyed join algebra value-exactly,

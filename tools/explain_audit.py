@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -398,6 +399,24 @@ def main() -> None:
     assert n_split <= 2, (
         f"winnowing plan evaluates the word split {n_split} times — the "
         f"tokenize expression is being inlined per gram element again!")
+
+    # 18. incremental winnowing: only new fingerprints probe old ∪ new, and
+    # each pair with a new side comes out once per shared fingerprint, so
+    # the per-pair count needs no (doc_a, doc_b, fp) distinct and its
+    # shuffle; no cartesian either.
+    odd = F.col("doc_id").cast("long") % 2 == 1
+    wi_index = text_ops.winnow_fingerprints(ddocs.where(~odd)).select(
+        "doc_id", "fp").distinct()
+    wi_plan = plan_of(dedup_ops.winnow_near_dup_pairs_incremental(
+        ddocs.where(odd), wi_index, persist=False))
+    sections.append((
+        "incremental winnowing pairs (new-keyed probe; no (doc_a, doc_b, fp) distinct)",
+        wi_plan,
+        ["HashAggregate", "Join"],
+    ))
+    assert "CartesianProduct" not in wi_plan, "incremental winnow join is cartesian!"
+    assert not re.search(r"hashpartitioning\(doc_a#\d+, doc_b#\d+, fp#", wi_plan), (
+        "incremental winnow shuffles a (doc_a, doc_b, fp) distinct again!")
 
     out = ["# Physical-plan audit (generated by tools/explain_audit.py)\n"]
     ok_all = True
