@@ -32,14 +32,23 @@ The stage-1 contract lives in ``sketch_partials`` alone:
   and quantile aggregates drop it. Scalar NULLs are filtered in the JVM.
   NULL array cells and elements are dropped in numpy, paid for only by the
   batches that hold one. A key whose items are all NULL emits no partial.
-- partitioning: ``spread_partitions`` is the one place that decides to
-  repartition: to ``input_partitions`` when given (no probe), else up to
-  ``defaultParallelism`` when the input arrives in fewer splits.
+- partitioning: ``spread_partitions`` is the one place that decides it:
+  ``input_partitions`` when given (no probe); else an input in fewer splits
+  than ``defaultParallelism`` is spread round-robin to it, and one in more
+  splits than ``max(defaultParallelism, ceil(size /
+  spark.sql.files.maxPartitionBytes))`` (``size`` the optimizer's estimate,
+  read from the plan without a job) is merged to that count by a narrow
+  ``coalesce``. Each Python task pays a fixed worker set-up (~0.2-0.3 s,
+  SCALE.md §4), so a small input runs one task per core, not one per split.
 
-Because every kernel's merge is associative + commutative, any partitioning
-and any tree shape produce bit-identical registers (tested in
-tests/test_property_merge.py), mirroring the reference's merge contracts
-(ref: any_sketch.py:36-105, hyper_log_log.py:217-246).
+For the kernels whose merge is associative + commutative and
+partition-invariant (HLL, Bloom/ADBF, count-min, VoC, FLL, Liquid Legions:
+property-tested in tests/test_property_merge.py), any partitioning and any
+tree shape produce bit-identical states, mirroring the reference's merge
+contracts (ref: any_sketch.py:36-105, hyper_log_log.py:217-246). KLL and
+t-digest compact by sampling: they reproduce a result exactly only for a
+fixed partitioning (sketches/kll.py), so the rule above, which can change
+an input's partition count, can change their states within their bounds.
 
 Scale notes (100 TB posture):
 - Raw rows are never shuffled for a global sketch: the only shuffle moves
@@ -80,16 +89,30 @@ def spread_partitions(
 ) -> tuple[DataFrame, int]:
     """The one partitioning decision: ``(frame, partition count)``.
 
-    A 100 TB scan arrives in thousands of splits and is left alone; a local
-    single-file read arrives in one and is spread round-robin to
-    ``defaultParallelism`` so every core works. ``input_partitions`` forces
-    the count without probing the input's own."""
+    An input in fewer splits than ``defaultParallelism`` (a local
+    single-file read arrives in one) is spread round-robin to it so every
+    core works. An input in more splits than its size calls for, that is
+    ``max(defaultParallelism, ceil(size / spark.sql.files.maxPartitionBytes))``
+    with ``size`` the optimizer's estimate, is merged to that count by a
+    narrow ``coalesce``: no shuffle, and each Python task's fixed set-up is
+    paid once per core rather than once per split. A 100 TB scan, whose
+    estimate calls for at least as many tasks as it has splits, and an
+    input of unknown size are left alone. ``input_partitions`` forces the
+    count without probing the input's own."""
     if input_partitions:
         return df.repartition(input_partitions), input_partitions
-    target = df.sparkSession.sparkContext.defaultParallelism
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
     n = df.rdd.getNumPartitions()
-    if n < target:
-        return df.repartition(target), target
+    if n < cores:
+        return df.repartition(cores), cores
+    # read from the plan, no job; an unknown size reads Long.MaxValue
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if size < 2**63 - 1:
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        target = max(cores, -(-size // split))
+        if n > target:
+            return df.coalesce(target), target
     return df, n
 
 

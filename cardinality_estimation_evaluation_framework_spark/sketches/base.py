@@ -163,6 +163,14 @@ class SketchKernel(ABC):
     def update(self, state: State, values: np.ndarray) -> State:
         """Fold a batch of int64 ids into state. May mutate and return state."""
 
+    def update_counts(
+        self, state: State, values: np.ndarray, counts: np.ndarray
+    ) -> State:
+        """Fold ``values[i]`` repeated ``counts[i]`` times: byte for byte
+        ``update(state, np.repeat(values, counts))``. Kernels whose state
+        ignores the order of values override it to hash each value once."""
+        return self.update(state, np.repeat(values, counts))
+
     @abstractmethod
     def merge(self, a: State, b: State) -> State:
         ...

@@ -92,6 +92,15 @@ class BloomKernel(SketchKernel):
         return {"registers": np.zeros(self.m, dtype=np.float64)}
 
     def update(self, state: State, values: np.ndarray) -> State:
+        return self.update_counts(state, values, None)
+
+    def update_counts(
+        self, state: State, values: np.ndarray, counts: np.ndarray | None
+    ) -> State:
+        """Set (``or``: idempotent, so counts are ignored) or add to
+        (``sum``) each value's registers, ``counts`` times per value when
+        given (bit-identical to repeated adds on integer registers, which
+        every built state holds)."""
         if len(values) == 0:
             return state
         regs = state["registers"]
@@ -117,8 +126,10 @@ class BloomKernel(SketchKernel):
             idx = self.dist.indexes(h)
             if self.value_fn == "or":
                 any_sketch.fold_or(regs, idx)
-            else:
+            elif counts is None:
                 any_sketch.fold_sum(regs, idx)
+            else:
+                regs += np.bincount(idx, weights=counts, minlength=self.m)
         return state
 
     def merge(self, a: State, b: State) -> State:

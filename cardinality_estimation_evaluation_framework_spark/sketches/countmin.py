@@ -77,13 +77,21 @@ class CountMinKernel(SketchKernel):
         }
 
     def update(self, state: State, values: np.ndarray) -> State:
+        return self.update_counts(state, values, None)
+
+    def update_counts(
+        self, state: State, values: np.ndarray, counts: np.ndarray | None
+    ) -> State:
+        """Add each value ``counts`` times (once when None); float64 bincount
+        weights are exact integers below 2^53."""
         if len(values) == 0:
             return state
         table = state["table"]
         for r in range(self.depth):
             idx = self._row_idx(values, r)
-            table[r] += np.bincount(idx, minlength=self.width)
-        state["n"][0] += len(values)
+            hits = np.bincount(idx, weights=counts, minlength=self.width)
+            table[r] += hits.astype(np.int64, copy=False)
+        state["n"][0] += len(values) if counts is None else int(counts.sum())
         return state
 
     def merge(self, a: State, b: State) -> State:

@@ -134,6 +134,12 @@ class HllKernel(SketchKernel):
             state["sparse"] = self._pack_sparse(ids)
         return state
 
+    def update_counts(
+        self, state: State, values: np.ndarray, counts: np.ndarray
+    ) -> State:
+        # register max and the sparse union are idempotent: repeats add nothing
+        return self.update(state, values)
+
     def merge(self, a: State, b: State) -> State:
         # ref: hyper_log_log.py:232 — register-wise max
         out = {"registers": np.maximum(a["registers"], b["registers"])}

@@ -51,9 +51,22 @@ class SuiteKernel(SketchKernel):
             state[f"{name}::{key}"] = arr
 
     def update(self, state: State, values: np.ndarray) -> State:
-        for name, k in self.kernels.items():
+        # distinct-then-update: hash each distinct value once for the
+        # children that take counts; the others (KLL, t-digest: their state
+        # depends on the order of values) keep the batch as it came
+        counted = [
+            type(k).update_counts is not SketchKernel.update_counts
+            for k in self.kernels.values()
+        ]
+        if any(counted):
+            uniq, counts = np.unique(values, return_counts=True)
+        for (name, k), by_count in zip(self.kernels.items(), counted):
             child = self._child_state(state, name)
-            self._store(state, name, k.update(child, values))
+            if by_count:
+                child = k.update_counts(child, uniq, counts)
+            else:
+                child = k.update(child, values)
+            self._store(state, name, child)
         return state
 
     def merge(self, a: State, b: State) -> State:

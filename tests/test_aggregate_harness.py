@@ -142,3 +142,69 @@ def test_spread_partitions_does_not_probe_a_given_count():
             raise AssertionError("probed the partition count")
 
     assert agg.spread_partitions(Frame(), 3) == (("repartitioned", 3), 3)
+
+
+def test_spread_partitions_coalesces_a_small_input_without_a_job(spark):
+    # 80 KB in 2 x cores splits: one task per core, merged by a narrow
+    # coalesce, decided from the plan's size estimate without a Spark job
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(10_000, numPartitions=2 * cores)
+    sc = spark.sparkContext
+    sc.setJobGroup("spread-small", "spread-small")
+    try:
+        out, n = agg.spread_partitions(df)
+        jobs = sc.statusTracker().getJobIdsForGroup("spread-small")
+        out.count()  # the tracker does see this group's jobs
+        ran = sc.statusTracker().getJobIdsForGroup("spread-small")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [] and ran, (jobs, ran)
+    assert n == cores
+    assert out.rdd.getNumPartitions() == cores
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_spread_partitions_keeps_splits_its_size_calls_for(spark):
+    # with 1 KB splits the same 80 KB calls for 79 tasks: its 2 x cores stay
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(10_000, numPartitions=2 * cores)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        out, n = agg.spread_partitions(df)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert out is df and n == 2 * cores
+
+
+def test_sketch_tokens_over_coalesced_splits_matches_numpy(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
+        BloomKernel,
+    )
+    from cardinality_estimation_evaluation_framework_spark.sketches.countmin import (
+        CountMinKernel,
+    )
+    from cardinality_estimation_evaluation_framework_spark.sketches.suite import (
+        SuiteKernel,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    tokens = (np.random.RandomState(5).zipf(1.2, (2_000, 25)) % 50_000).astype(np.int32)
+    offsets = np.arange(0, tokens.size + 1, tokens.shape[1], dtype=np.int32)
+    path = str(tmp_path / "tokens.parquet")
+    pq.write_table(pa.table(
+        {"tokens": pa.ListArray.from_arrays(offsets, pa.array(tokens.ravel()))}
+    ), path)
+    # a file scan has a size estimate; a frame made from a Python list has none
+    df = spark.read.parquet(path).repartition(2 * cores)
+    k = SuiteKernel({
+        "hll": HllKernel(p=12, seed=3),
+        "cm": CountMinKernel(width=1024, depth=3, seed=1),
+        "bloom": BloomKernel(dist_kind="exponential", m=4096, seed=2, decay_rate=10.0),
+    })
+    partials = agg.sketch_array_partials(df, k)
+    assert partials._ceef_nparts == cores == partials.count()
+    local = k.update(k.empty(), tokens.ravel().astype(np.int64))
+    assert k.pack(agg.sketch_tokens(df, k)) == k.pack(local)

@@ -60,3 +60,54 @@ def test_suite_rejects_empty_and_namespaced_children():
         SuiteKernel({})
     with pytest.raises(ValueError, match="::"):
         SuiteKernel({"a::b": HllKernel(p=10)})
+
+
+_REPEATS = np.random.RandomState(6).zipf(1.3, 40_000).astype(np.int64) % 5_000
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        HllKernel(p=12, seed=1),
+        HllKernel(p=8, seed=1, sparse_mode=True),
+        CountMinKernel(width=512, depth=3, seed=2),
+        BloomKernel(dist_kind="exponential", m=10_000, seed=3, decay_rate=10.0),
+        BloomKernel(m=4096, num_hashes=3, seed=4, value_fn="sum"),
+        _suite(),
+        SuiteKernel({
+            "hll": HllKernel(p=10, seed=5),
+            "counting": BloomKernel(dist_kind="geometric", m=2048, value_fn="sum",
+                                    probability=0.0015),
+        }),
+    ],
+    ids=["hll", "hll-sparse", "countmin", "bloom-or", "bloom-sum", "suite", "suite-sum"],
+)
+def test_update_counts_equals_update_on_repeats(kernel):
+    uniq, counts = np.unique(_REPEATS, return_counts=True)
+    assert counts.max() > 1
+    whole = kernel.update(kernel.empty(), _REPEATS)
+    counted = kernel.update_counts(kernel.empty(), uniq, counts)
+    assert kernel.pack(counted) == kernel.pack(whole)
+
+
+def test_suite_keeps_value_order_for_order_dependent_children():
+    # KLL compaction depends on the order of values: the suite hands it the
+    # batch as it came, while the order-free children fold distinct values
+    seen = []
+
+    class RecordingKll(KllKernel):
+        def update(self, state, values):
+            seen.append(values.copy())
+            return super().update(state, values)
+
+    vals = _REPEATS
+    suite = SuiteKernel({"hll": HllKernel(p=10, seed=5), "kll": RecordingKll(k=64, seed=7)})
+    st = suite.update(suite.empty(), vals)
+    assert len(seen) == 1 and np.array_equal(seen[0], vals)
+    for name, kernel in suite.kernels.items():
+        solo = kernel.update(kernel.empty(), vals)
+        assert kernel.pack(suite.child(st, name)) == kernel.pack(solo), name
+    uniq, counts = np.unique(vals, return_counts=True)
+    assert suite.pack(suite.update_counts(suite.empty(), uniq, counts)) == suite.pack(
+        suite.update(suite.empty(), np.repeat(uniq, counts))
+    )

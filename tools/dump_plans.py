@@ -1,0 +1,123 @@
+"""Dump the normalised physical plan of each named builder to one file, for
+the before/after plan diffs kept under plans/rNN/.
+
+Usage: python tools/dump_plans.py OUT_DIR {before,after} SF_DIR [builder ...]
+
+Writes OUT_DIR/{builder}_{before,after}.txt for every builder in BUILDERS
+(or the ones named), over SF_DIR/documents.parquet. The plans are those of
+the package in the checkout this script sits in, so for a "before" dump
+run a copy of it inside a checkout of the parent commit. Every builder is
+planned in a fresh process (its own JVM), so the plan_ids of two checkouts
+line up, on local[4] with AQE off (the formatted plan is then the one that
+runs, not an AdaptiveSparkPlan placeholder). Expression ids are renumbered
+in order of first appearance and scan paths cut to the file name, so a
+diff shows only what the code changed.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import io
+import os
+import re
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CORES = 4
+
+
+def _cached(df):
+    """``df`` cached over 2 x cores splits, as a benchmark input arrives:
+    a small input in more splits than cores."""
+    df = df.repartition(2 * CORES).persist()
+    df.count()
+    return df
+
+
+def _sketch_partials(spark, docs):
+    from cardinality_estimation_evaluation_framework_spark.datagen import tokens as tk
+    from cardinality_estimation_evaluation_framework_spark.operators import aggregate as agg
+    from cardinality_estimation_evaluation_framework_spark.sketches.hll import HllKernel
+
+    tokens = _cached(tk.tokenize_hashed(docs).select("tokens"))
+    return agg.sketch_partials(tokens, HllKernel(p=12, seed=1), "tokens")
+
+
+def _minhash_signatures(spark, docs):
+    from pyspark.sql import functions as F
+
+    from cardinality_estimation_evaluation_framework_spark.operators import dedup
+
+    return dedup.minhash_signatures(_cached(
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")))
+
+
+#: builder -> (the call as printed in the header, plan function)
+BUILDERS = {
+    "sketch_partials": (
+        "sketch_partials(cached(tokenize_hashed(docs).select('tokens')),"
+        " HllKernel(p=12, seed=1), 'tokens')",
+        _sketch_partials,
+    ),
+    "minhash_signatures": (
+        "minhash_signatures(cached(docs.select(doc_id cast string, text)))",
+        _minhash_signatures,
+    ),
+}
+
+
+def normalise(plan: str) -> str:
+    """Renumber expression ids by first appearance; cut scan paths to the
+    file name."""
+    ids: dict[str, str] = {}
+    plan = re.sub(r"#(\d+)", lambda m: "#" + ids.setdefault(m[1], str(len(ids) + 1)), plan)
+    return re.sub(r"file:[^\],]*/([^/\],]+)", r"file:\1", plan)
+
+
+def dump_one(name: str, sf_dir: str) -> str:
+    sys.path.insert(0, REPO)
+    from cardinality_estimation_evaluation_framework_spark.session import get_spark
+
+    spark = get_spark(
+        f"plan-dump-{name}", cores=CORES,
+        extra_conf={"spark.sql.adaptive.enabled": "false"},
+    )
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    call, build = BUILDERS[name]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        build(spark, docs).explain("formatted")
+    spark.stop()
+    return (
+        f"# {call} over {os.path.basename(sf_dir)} documents.parquet, "
+        f"local[{CORES}], AQE off; cached(df) = df.repartition({2 * CORES})"
+        ".persist(), counted;\n"
+        "# expression ids renumbered in order of first appearance\n\n"
+        + normalise(buf.getvalue())
+    )
+
+
+def main() -> int:
+    if sys.argv[1:2] == ["--one"]:
+        sys.stdout.write(dump_one(sys.argv[2], sys.argv[3]))
+        return 0
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    out_dir, side, sf_dir = sys.argv[1:4]
+    names = sys.argv[4:] or list(BUILDERS)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        res = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--one", name, sf_dir],
+            capture_output=True, text=True, check=True,
+        )
+        path = os.path.join(out_dir, f"{name}_{side}.txt")
+        with open(path, "w") as fh:
+            fh.write(res.stdout)
+        print("wrote", path, flush=True)
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

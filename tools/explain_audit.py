@@ -14,10 +14,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -99,6 +101,22 @@ def main() -> None:
         plan_of(partials),
         ["* Generate", "MapInPandas"],
     ))
+    # a small token-array input cached in more splits than cores is merged
+    # to one task per core by a narrow Coalesce: still no Exchange between
+    # the cached scan and the partial stage
+    cores = spark.sparkContext.defaultParallelism
+    cached = tk.tokenize_hashed(docs).select("tokens").repartition(2 * cores).persist()
+    cached.count()
+    arr_plan = plan_of(agg.sketch_partials(cached, HllKernel(p=12, seed=1), "tokens"))
+    sections.append((
+        "sketch partial stage over cached token arrays in 2 x cores splits",
+        arr_plan,
+        ["Coalesce", "MapInPandas"],
+    ))
+    above_scan = tree_of(arr_plan).split("InMemoryRelation")[0]
+    assert "Coalesce" in above_scan, "small input not merged to one task per core!"
+    assert "Exchange" not in above_scan, "raw rows are shuffled before the partials!"
+    cached.unpersist()
 
     # 2. column pruning: tokenizer must read only (doc_id, text, source)
     narrow = tk.tokenize_hashed(docs).select("n_tok")
@@ -429,7 +447,7 @@ def main() -> None:
         out.append(f"\n## {title}\n\n" + "\n".join(f"- {c}" for c in checks))
         out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
         print(title, "->", "; ".join(checks))
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("PLANS.md written;", "ALL OK" if ok_all else "SOME MARKERS MISSING")
 

@@ -22,6 +22,7 @@ cycle through that subset only, and FUZZ.json is left as it is.
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 import time
@@ -32,8 +33,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracles import normalize
 

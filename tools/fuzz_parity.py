@@ -32,14 +32,16 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import random
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from reference_loader import ref_module
 
@@ -537,7 +539,7 @@ def main() -> int:
         "total_sec": round(time.time() - t0, 1),
         "trials": records,
     }
-    with open("/root/repo/PARITY_FUZZ.json", "w") as f:
+    with open(os.path.join(REPO, "PARITY_FUZZ.json"), "w") as f:
         json.dump(summary, f, indent=1)
     print(f"PARITY_FUZZ: {n_trials - failures}/{n_trials} OK, "
           f"{len(summary['families'])} families, {summary['total_sec']}s")

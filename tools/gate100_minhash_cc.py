@@ -36,6 +36,7 @@ Writes GATE100.json; exit 1 on any failure.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -43,8 +44,9 @@ import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracles import normalize
 
@@ -68,12 +70,12 @@ def planted_docs(spark, sf_dir):
 def dump(out: dict) -> None:
     """Incremental write: a crash in a later section (e.g. a disk-full
     in a 100x join) must not discard completed sections' results."""
-    with open("/root/repo/GATE100.json", "w") as fh:
+    with open(os.path.join(REPO, "GATE100.json"), "w") as fh:
         json.dump(out, fh, indent=1)
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sfbig100"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".sfbig100")
     spark = get_spark("gate100", cores=32)
     out: dict = {"sf_dir": sf_dir}
     failures = 0

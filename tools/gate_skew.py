@@ -34,8 +34,9 @@ import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracles import normalize
 
@@ -92,7 +93,7 @@ def cap_stats(banded, keys):
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sfskew"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".sfskew")
     if not os.path.exists(os.path.join(sf_dir, "documents.parquet")):
         # the corpus is a pure function of a fixed seed — regenerate instead
         # of keeping a 7 MB binary in git (ADVICE r6)
@@ -203,7 +204,7 @@ def main() -> int:
     failures = compare("winnow_pairs", win_pdf, duck_win, out, failures)
 
     out["failures"] = failures
-    with open("/root/repo/SKEW.json", "w") as fh:
+    with open(os.path.join(REPO, "SKEW.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(f"SKEW gate: failures={failures} -> SKEW.json", flush=True)
     return 1 if failures else 0

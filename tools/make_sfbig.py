@@ -27,6 +27,8 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SRC = "/root/testdata/sf0.1"
 KEY_SHIFT = 10_000_000
 
@@ -73,7 +75,7 @@ SCALED = {
 
 
 def main() -> int:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sfbig"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".sfbig")
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out_dir, exist_ok=True)
     con = duckdb.connect()

@@ -36,6 +36,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 N_DOCS = 50_000
 GIANT_ID = 9_999_999
 DUP_SHIFT = 10_000_000
@@ -87,7 +89,7 @@ def build_rows() -> tuple[list[int], list[str], list[str]]:
 
 
 def main() -> int:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sfskew"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".sfskew")
     os.makedirs(out_dir, exist_ok=True)
     ids, texts, sources = build_rows()
     tbl = pa.table({
