@@ -97,8 +97,11 @@ def spread_partitions(
     narrow ``coalesce``: no shuffle, and each Python task's fixed set-up is
     paid once per core rather than once per split. A 100 TB scan, whose
     estimate calls for at least as many tasks as it has splits, and an
-    input of unknown size are left alone. ``input_partitions`` forces the
-    count without probing the input's own."""
+    input of unknown size are left alone. The estimate is exact for a
+    cached or scanned table; a column generated in the plan (``range`` plus
+    a ``transform`` into arrays) is under-counted, so such an input runs
+    one task per core whatever its real size. ``input_partitions`` forces
+    the count without probing the input's own."""
     if input_partitions:
         return df.repartition(input_partitions), input_partitions
     spark = df.sparkSession

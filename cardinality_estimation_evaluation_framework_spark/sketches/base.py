@@ -151,6 +151,12 @@ class SketchKernel(ABC):
     #: xxhash64'd JVM-side), "float64" for value sketches (quantiles).
     input_dtype: str = "int64"
 
+    #: has ``update_counts(state, values, counts)``, byte for byte
+    #: ``update(state, np.repeat(values, counts))``: set by the kernels whose
+    #: state ignores the order of values (HLL, Bloom/ADBF, count-min), so a
+    #: suite can fold each distinct value of a batch once.
+    takes_counts: bool = False
+
     @abstractmethod
     def spec(self) -> dict[str, Any]:
         """JSON-able config; equality defines merge compatibility."""
@@ -162,14 +168,6 @@ class SketchKernel(ABC):
     @abstractmethod
     def update(self, state: State, values: np.ndarray) -> State:
         """Fold a batch of int64 ids into state. May mutate and return state."""
-
-    def update_counts(
-        self, state: State, values: np.ndarray, counts: np.ndarray
-    ) -> State:
-        """Fold ``values[i]`` repeated ``counts[i]`` times: byte for byte
-        ``update(state, np.repeat(values, counts))``. Kernels whose state
-        ignores the order of values override it to hash each value once."""
-        return self.update(state, np.repeat(values, counts))
 
     @abstractmethod
     def merge(self, a: State, b: State) -> State:

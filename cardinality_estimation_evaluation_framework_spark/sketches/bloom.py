@@ -43,6 +43,8 @@ class BloomKernel(SketchKernel):
     value_fn: "or" (bit registers) or "sum" (counting registers).
     """
 
+    takes_counts = True
+
     def __init__(
         self,
         dist_kind: str = "uniform",

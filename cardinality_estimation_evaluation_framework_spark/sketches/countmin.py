@@ -35,6 +35,8 @@ _PORTABLE_AB = [
 
 
 class CountMinKernel(SketchKernel):
+    takes_counts = True
+
     def __init__(self, width: int = 2048, depth: int = 5, seed: int = 0, portable: bool = False):
         self.width = width
         self.depth = depth

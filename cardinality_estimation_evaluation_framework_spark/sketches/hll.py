@@ -70,6 +70,8 @@ class HllKernel(SketchKernel):
       default OFF — dense + linear counting covers most of the accuracy.
     """
 
+    takes_counts = True
+
     def __init__(self, p: int = 14, seed: int = 0, hash_kind: str = "splitmix",
                  sparse_mode: bool = False):
         if not (4 <= p <= 18):

@@ -19,6 +19,23 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     State,
 )
 
+# 0x9E3779B97F4A7C15 (Fibonacci hashing) as a signed int64
+_MIX = np.int64(-0x61C8864680B583EB)
+_SHARE = np.uint64(1 << 58)  # mixed values below it: 1/64 of them
+
+
+def _mostly_repeats(values: np.ndarray) -> bool:
+    """Whether np.unique pays for itself on this batch: at most 3/4 of its
+    values are distinct. Judged on the ~1/64 of the values whose mixed bits
+    fall below ``_SHARE``: a share drawn by value, so every copy of a value
+    falls on the same side and the share keeps the batch's distinct
+    fraction (a share drawn by position reads a batch of pairs as
+    all-distinct). Costs ~2 ns a value; np.unique ~17-40 and the HLL +
+    count-min + ADBF updates ~180-220, so it breaks even near 85%
+    distinct (SCALE.md §4)."""
+    share = values[(values * _MIX).view(np.uint64) < _SHARE]
+    return len(share) > 0 and 4 * len(np.unique(share)) <= 3 * len(share)
+
 
 class SuiteKernel(SketchKernel):
     def __init__(self, kernels: dict[str, SketchKernel]):
@@ -28,6 +45,7 @@ class SuiteKernel(SketchKernel):
             if "::" in name:
                 raise ValueError(f"suite child names cannot contain '::': {name!r}")
         self.kernels = dict(kernels)
+        self._counted = [k.takes_counts for k in self.kernels.values()]
 
     def spec(self) -> dict[str, Any]:
         return {
@@ -51,18 +69,15 @@ class SuiteKernel(SketchKernel):
             state[f"{name}::{key}"] = arr
 
     def update(self, state: State, values: np.ndarray) -> State:
-        # distinct-then-update: hash each distinct value once for the
-        # children that take counts; the others (KLL, t-digest: their state
-        # depends on the order of values) keep the batch as it came
-        counted = [
-            type(k).update_counts is not SketchKernel.update_counts
-            for k in self.kernels.values()
-        ]
-        if any(counted):
+        # distinct-then-update when the batch repeats enough values to pay
+        # for np.unique; the children without update_counts (KLL, t-digest:
+        # their state depends on the order of values) keep the batch as it came
+        dedup = any(self._counted) and _mostly_repeats(values)
+        if dedup:
             uniq, counts = np.unique(values, return_counts=True)
-        for (name, k), by_count in zip(self.kernels.items(), counted):
+        for (name, k), counted in zip(self.kernels.items(), self._counted):
             child = self._child_state(state, name)
-            if by_count:
+            if dedup and counted:
                 child = k.update_counts(child, uniq, counts)
             else:
                 child = k.update(child, values)

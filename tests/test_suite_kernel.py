@@ -63,6 +63,10 @@ def test_suite_rejects_empty_and_namespaced_children():
 
 
 _REPEATS = np.random.RandomState(6).zipf(1.3, 40_000).astype(np.int64) % 5_000
+_DISTINCT = np.random.default_rng(7).choice(2**40, 40_000, replace=False).astype(np.int64)
+# each of 20,000 values twice, shuffled: a share drawn by position would
+# read it as all-distinct
+_PAIRS = np.random.RandomState(8).permutation(np.repeat(_DISTINCT[:20_000], 2))
 
 
 @pytest.mark.parametrize(
@@ -73,16 +77,11 @@ _REPEATS = np.random.RandomState(6).zipf(1.3, 40_000).astype(np.int64) % 5_000
         CountMinKernel(width=512, depth=3, seed=2),
         BloomKernel(dist_kind="exponential", m=10_000, seed=3, decay_rate=10.0),
         BloomKernel(m=4096, num_hashes=3, seed=4, value_fn="sum"),
-        _suite(),
-        SuiteKernel({
-            "hll": HllKernel(p=10, seed=5),
-            "counting": BloomKernel(dist_kind="geometric", m=2048, value_fn="sum",
-                                    probability=0.0015),
-        }),
     ],
-    ids=["hll", "hll-sparse", "countmin", "bloom-or", "bloom-sum", "suite", "suite-sum"],
+    ids=["hll", "hll-sparse", "countmin", "bloom-or", "bloom-sum"],
 )
 def test_update_counts_equals_update_on_repeats(kernel):
+    assert kernel.takes_counts
     uniq, counts = np.unique(_REPEATS, return_counts=True)
     assert counts.max() > 1
     whole = kernel.update(kernel.empty(), _REPEATS)
@@ -90,24 +89,52 @@ def test_update_counts_equals_update_on_repeats(kernel):
     assert kernel.pack(counted) == kernel.pack(whole)
 
 
-def test_suite_keeps_value_order_for_order_dependent_children():
-    # KLL compaction depends on the order of values: the suite hands it the
-    # batch as it came, while the order-free children fold distinct values
-    seen = []
+class _RecordingKll(KllKernel):
+    """Records the batches the suite hands it."""
 
-    class RecordingKll(KllKernel):
-        def update(self, state, values):
-            seen.append(values.copy())
-            return super().update(state, values)
+    def __init__(self, *a, **kw):
+        super().__init__(*a, **kw)
+        self.seen = []
 
-    vals = _REPEATS
-    suite = SuiteKernel({"hll": HllKernel(p=10, seed=5), "kll": RecordingKll(k=64, seed=7)})
-    st = suite.update(suite.empty(), vals)
-    assert len(seen) == 1 and np.array_equal(seen[0], vals)
+    def update(self, state, values):
+        self.seen.append(values.copy())
+        return super().update(state, values)
+
+
+class _RecordingCountMin(CountMinKernel):
+    """Records whether each fold came with counts."""
+
+    def __init__(self, *a, **kw):
+        super().__init__(*a, **kw)
+        self.with_counts = []
+
+    def update_counts(self, state, values, counts):
+        self.with_counts.append(counts is not None)
+        return super().update_counts(state, values, counts)
+
+
+@pytest.mark.parametrize(
+    "values, dedup",
+    [(_REPEATS, True), (_PAIRS, True), (_DISTINCT, False)],
+    ids=["zipf", "pairs", "distinct"],
+)
+def test_suite_dedups_only_batches_with_repeats(values, dedup):
+    # np.unique pays only when values repeat: the suite folds distinct values
+    # into the children that take counts when its by-value share says so,
+    # and every child's state is byte-identical to its own update either way.
+    # KLL compaction depends on the order of values: it always gets the
+    # batch as it came.
+    suite = SuiteKernel({
+        "hll": HllKernel(p=10, seed=5),
+        "cm": _RecordingCountMin(width=512, depth=3, seed=2),
+        "counting": BloomKernel(dist_kind="geometric", m=2048, value_fn="sum",
+                                probability=0.0015),
+        "kll": _RecordingKll(k=64, seed=7),
+    })
+    st = suite.update(suite.empty(), values)
+    assert suite.kernels["cm"].with_counts == [dedup]
+    kll = suite.kernels["kll"]
+    assert len(kll.seen) == 1 and np.array_equal(kll.seen[0], values)
     for name, kernel in suite.kernels.items():
-        solo = kernel.update(kernel.empty(), vals)
+        solo = kernel.update(kernel.empty(), values)
         assert kernel.pack(suite.child(st, name)) == kernel.pack(solo), name
-    uniq, counts = np.unique(vals, return_counts=True)
-    assert suite.pack(suite.update_counts(suite.empty(), uniq, counts)) == suite.pack(
-        suite.update(suite.empty(), np.repeat(uniq, counts))
-    )
