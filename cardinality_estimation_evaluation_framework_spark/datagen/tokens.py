@@ -15,25 +15,28 @@ Python), with two token-id schemes:
   correctness gate, not the throughput path.
 
 The tokenizer itself (lowercase, split on non-alphanumeric, drop empties)
-is chosen to be expressible identically in Spark SQL and DuckDB SQL; the
-shared SQL fragments live in ``TOKENS_CTE_DUCKDB`` / ``tokens_cte_spark``.
+is the one every text operator uses: ``operators.text.words`` in Spark and
+``operators.text.words_sql`` in DuckDB, which tokenize identically.
+``TOKENS_CTE_DUCKDB`` is the DuckDB twin of :func:`tokens_exploded`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-TOKEN_SPLIT_RE = "[^a-z0-9]+"
+from cardinality_estimation_evaluation_framework_spark.operators.text import (
+    explode_words,
+    words,
+    words_sql,
+)
 
 # DuckDB CTE producing (doc_id, source, tok) — one row per token occurrence.
-# Must stay semantically identical to tokens_exploded() below.
-TOKENS_CTE_DUCKDB = """
-tok_raw AS (
+TOKENS_CTE_DUCKDB = f"""
+toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
-         unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tok
+         unnest({words_sql('text')}) AS tok
   FROM documents
-),
-toks AS (SELECT doc_id, source, tok FROM tok_raw WHERE tok <> '')
+)
 """
 
 # DuckDB CTE producing (tok, tid) — 0-based dense vocabulary ids.
@@ -47,14 +50,8 @@ vocab AS (
 
 def tokens_exploded(docs: DataFrame) -> DataFrame:
     """(doc_id string, source, tok string) — one row per token occurrence."""
-    return (
-        docs.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            "source",
-            F.explode(F.split(F.lower(F.col("text")), TOKEN_SPLIT_RE)).alias("tok"),
-        )
-        .where(F.col("tok") != "")
-    )
+    return explode_words(
+        docs, F.col("doc_id").cast("string").alias("doc_id"), "source")
 
 
 def vocab(docs: DataFrame) -> DataFrame:
@@ -96,8 +93,7 @@ def vocab(docs: DataFrame) -> DataFrame:
 
 def tokenize_hashed(docs: DataFrame) -> DataFrame:
     """Production tokens table: ids from xxhash64 — no vocab, no shuffle."""
-    toks = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT_RE), lambda t: t != "")
-    tokens = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(2**31 - 1)).cast("int"))
+    tokens = F.transform(words("text"), lambda t: F.pmod(F.xxhash64(t), F.lit(2**31 - 1)).cast("int"))
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         tokens.alias("tokens"),
@@ -110,17 +106,12 @@ def tokenize_vocab(docs: DataFrame) -> DataFrame:
     """Oracle-parity tokens table: ids from the dense vocabulary.
 
     The vocab join broadcasts (|V| small); token order within a doc is
-    preserved via posexplode + array re-assembly.
+    preserved via positions + array re-assembly.
     """
     v = vocab(docs)
-    exploded = (
-        docs.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            "source",
-            F.posexplode(F.split(F.lower(F.col("text")), TOKEN_SPLIT_RE)).alias("pos", "tok"),
-        )
-        .where(F.col("tok") != "")
-    )
+    exploded = explode_words(
+        docs, F.col("doc_id").cast("string").alias("doc_id"), "source",
+        pos=True)
     joined = exploded.join(F.broadcast(v), "tok")
     return (
         joined.groupBy("doc_id", "source")

@@ -41,6 +41,11 @@ from cardinality_estimation_evaluation_framework_spark.operators import (
 from cardinality_estimation_evaluation_framework_spark.operators.dedup import (
     word_ngrams,
 )
+from cardinality_estimation_evaluation_framework_spark.operators.text import (
+    duckdb_gram_cte,
+    duckdb_tok_ctes,
+    gram_hash_arrays,
+)
 from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
     BloomKernel,
 )
@@ -66,10 +71,6 @@ def _gram_hash_arrays(docs: DataFrame, n: int, text_col: str,
     construction (no false negatives). NOTE: this definition changed in r7
     (was xxhash64 of the concatenated gram string) — Bloom states packed
     by earlier versions must be rebuilt before probing with this one."""
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        gram_hash_arrays,
-    )
-
     return gram_hash_arrays(
         docs, n,
         lambda wd, i: F.xxhash64(
@@ -234,30 +235,15 @@ def ngram_overlap_exact(docs: DataFrame, bench_docs: DataFrame, n: int = 8,
 def ngram_overlap_exact_sql(n: int = 8, min_hits: int = 1,
                             source_sql: str = "SELECT * FROM documents",
                             bench_sql: str = "SELECT * FROM documents") -> str:
-    """DuckDB twin of :func:`ngram_overlap_exact`."""
-
-    def grams_cte(src):
-        # linear explode+sliding-window gram form (see
-        # text.duckdb_tok_ctes for why the list-slice form is O(doc^2))
-        return f"""
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id, string_agg(word, ' ') OVER win AS gram,
-           count(*) OVER win AS _glen
-    FROM (
-      SELECT doc_id, generate_subscripts(w, 1) - 1 AS pos, unnest(w) AS word
-      FROM (
-        SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS w
-        FROM ({src})
-      )
-    )
-    WINDOW win AS (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN CURRENT ROW AND {n - 1} FOLLOWING)
-  ) WHERE _glen = {n}"""
-
+    """DuckDB twin of :func:`ngram_overlap_exact`. Grams come from the
+    shared linear token/gram CTEs, whose window runs per document row."""
     return f"""
-WITH doc_grams AS MATERIALIZED ({grams_cte(source_sql)}),
-bench_grams AS MATERIALIZED (SELECT DISTINCT gram FROM ({grams_cte(bench_sql)})),
+WITH {duckdb_tok_ctes("d_", source_sql=source_sql)},
+{duckdb_gram_cte(n, cte_name="d_grams", tok_cte="d_tok")},
+{duckdb_tok_ctes("b_", source_sql=bench_sql)},
+{duckdb_gram_cte(n, cte_name="b_grams", tok_cte="b_tok")},
+doc_grams AS MATERIALIZED (SELECT DISTINCT doc_id, gram FROM d_grams),
+bench_grams AS MATERIALIZED (SELECT DISTINCT gram FROM b_grams),
 doc_ids AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS doc_id FROM ({source_sql})),
 agg AS (
   SELECT d.doc_id,

@@ -48,7 +48,16 @@ from cardinality_estimation_evaluation_framework_spark.operators.aggregate impor
     spread_partitions,
 )
 from cardinality_estimation_evaluation_framework_spark.operators.text import (
+    duckdb_gram_cte,
+    duckdb_tok_ctes,
+    gram_at,
+    gram_hash_arrays,
+    gram_starts,
+    winnow_fingerprints,
+    winnow_fingerprints_sql,
     with_fingerprint,
+    words,
+    words_sql,
 )
 
 
@@ -175,22 +184,12 @@ def word_ngrams(docs: DataFrame, n: int = 3, text_col: str = "text",
     ``distinct=True`` (the Jaccard contract) costs one shuffle; minhash
     passes ``distinct=False`` because min() is duplicate-insensitive, so the
     signature kernel runs shuffle-free on the raw exploded grams."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != "")
-    doc = docs.select(F.col(id_col).cast("string").alias("doc_id"), words.alias("w"))
-    # guard: sequence(0, -1) is DESCENDING in Spark ([0, -1]), and
-    # slice(start=0) throws — docs with fewer than n words must yield an
-    # EMPTY index array, not a descending one
-    idxs = F.when(
-        F.size("w") >= n, F.sequence(F.lit(0), F.size("w") - n)
-    ).otherwise(F.array().cast("array<int>"))
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        gram_at,
-    )
-
+    doc = docs.select(F.col(id_col).cast("string").alias("doc_id"),
+                      words(text_col).alias("w"))
     grams = doc.select(
         "doc_id",
         F.explode(
-            F.transform(idxs, lambda i: gram_at("w", i, n))
+            F.transform(gram_starts(F.size("w"), n), lambda i: gram_at("w", i, n))
         ).alias("gram"),
     )
     return grams.distinct() if distinct else grams
@@ -229,11 +228,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
 def ngram_jaccard_pairs_sql(n: int = 3, threshold: float = 0.8,
                             source_sql: str = "SELECT * FROM documents") -> str:
     """DuckDB oracle twin of ngram_jaccard_pairs over the documents view."""
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        duckdb_gram_cte,
-        duckdb_tok_ctes,
-    )
-
     return f"""
 WITH {duckdb_tok_ctes(source_sql=source_sql)},
 {duckdb_gram_cte(n, cte_name="grams_all")},
@@ -287,11 +281,6 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
     per-gram hash values are bit-identical to the exploded form so
     signatures are unchanged.
     """
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        gram_at,
-        gram_hash_arrays,
-    )
-
     gram_hash = md5_u64_spark if portable else F.xxhash64
     # gram STRING hashing on purpose: signature values (and est_jaccard)
     # are output-visible, so the hash family must stay what it was
@@ -543,11 +532,6 @@ def minhash_dedup_pairs_sql(threshold: float = 0.8, num_hashes: int = 64,
         f"({k}, CAST({splitmix_offset(seed * 1_000_003 + k)} AS UBIGINT))"
         for k in range(num_hashes)
     )
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        duckdb_gram_cte,
-        duckdb_tok_ctes,
-    )
-
     return f"""
 WITH {duckdb_tok_ctes(source_sql=source_sql)},
 {duckdb_gram_cte(n, cte_name="grams_all")},
@@ -621,14 +605,11 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     remix, byte-histogram bit counting, sign-sum pack, chunk LSH) against a
     DuckDB oracle; the numpy kernel is identical on both paths."""
     tok_hash = md5_u64_spark if portable else F.xxhash64
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
     # Arrow shape (guide §4): token hashes cross as ONE array<long> per doc
     # (doc_id travels once per doc, not once per token); per-token hash
-    # values are bit-identical to the exploded form. `words` appears once
-    # as the transform input, so it is evaluated once per row.
-    ths = F.transform(words, lambda t: tok_hash(t))
+    # values are bit-identical to the exploded form. The word array
+    # appears once as the transform input, so it is evaluated once per row.
+    ths = F.transform(words(text_col), lambda t: tok_hash(t))
     doc_ths = spread_partitions(docs)[0].select(
         F.col(id_col).cast("string").alias("doc_id"), ths.alias("ths")
     )
@@ -750,7 +731,7 @@ def simhash_near_dup_pairs_sql(max_hamming: int = 3, seed: int = 0,
     return f"""
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS tok
+         unnest({words_sql('text')}) AS tok
   FROM ({source_sql})
 ),
 th0 AS (SELECT doc_id, {md5_u64_duckdb('tok')} AS g FROM toks),
@@ -1226,13 +1207,6 @@ def dup_span_stats(docs: DataFrame, window: int = 6, min_docs: int = 2,
         raise ValueError("window must be >= 1")
     if block_size < 1:
         raise ValueError("block_size must be >= 1")
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        gram_at,
-    )
-
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
     # n_tok is computed BELOW the generate on purpose: if size(w) sat in
     # the same select as the explode, ExtractGenerator would hoist it into
     # a Project ABOVE the Generate, forcing the full word array `w` into
@@ -1240,17 +1214,14 @@ def dup_span_stats(docs: DataFrame, window: int = 6, min_docs: int = 2,
     # n_tok output rows, O(doc^2) bytes. A 400k-token doc took 187 s that
     # way; with n_tok as a plain 8-byte attribute it is ~4 s and linear.
     doc = docs.select(
-        F.col(id_col).cast("string").alias("doc_id"), words.alias("w")
+        F.col(id_col).cast("string").alias("doc_id"), words(text_col).alias("w")
     ).select("doc_id", F.size("w").alias("n_tok"), "w")
-    idxs = F.when(
-        F.col("n_tok") >= window, F.sequence(F.lit(0), F.col("n_tok") - window)
-    ).otherwise(F.array().cast("array<int>"))
     wins = doc.select(
         "doc_id",
         "n_tok",
         F.explode(
             F.transform(
-                idxs,
+                gram_starts(F.col("n_tok"), window),
                 lambda i: F.struct(
                     i.alias("pos"),
                     # hash the W word columns directly (xxhash64 chains its
@@ -1352,11 +1323,6 @@ def dup_span_stats_sql(window: int = 6, min_docs: int = 2,
     Gram construction is the linear explode+sliding-window form
     (text.duckdb_gram_cte) so a 1M-token doc costs 1M window steps, not
     10^12 list-slice touches."""
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        duckdb_gram_cte,
-        duckdb_tok_ctes,
-    )
-
     w1 = window - 1
     return f"""
 WITH {duckdb_tok_ctes(source_sql=source_sql)},
@@ -1428,23 +1394,13 @@ def source_overlap_matrix(docs: DataFrame, n: int = 3, text_col: str = "text",
     is `sql_sketch.hll_registers_sql` grouped by source + pairwise
     union estimates (set_ops) — this exact form is the audit/oracle.
     """
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
     doc = docs.select(F.col(source_col).cast("string").alias("source"),
-                      words.alias("w"))
-    idxs = F.when(
-        F.size("w") >= n, F.sequence(F.lit(0), F.size("w") - n)
-    ).otherwise(F.array().cast("array<int>"))
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        gram_at,
-    )
-
+                      words(text_col).alias("w"))
     g = doc.select(
         "source",
         F.explode(
             F.transform(
-                idxs,
+                gram_starts(F.size("w"), n),
                 # hash the n word columns directly — no gram string alloc;
                 # the fp is internal (only gram equality matters) and
                 # xxhash64 chains inputs seed-wise, keeping boundaries
@@ -1481,11 +1437,6 @@ def source_overlap_matrix_sql(n: int = 3,
     """DuckDB oracle twin of source_overlap_matrix — groups raw gram
     text (no fingerprints), so an xxhash64 collision on the Spark side
     would surface as a gate mismatch."""
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        duckdb_gram_cte,
-        duckdb_tok_ctes,
-    )
-
     return f"""
 WITH {duckdb_tok_ctes(key_expr="CAST(source AS VARCHAR)", key_name="source",
                       source_sql=source_sql)},
@@ -1526,10 +1477,6 @@ def winnow_near_dup_pairs(docs: DataFrame, k: int = 3, w: int = 4,
     self-join so a fingerprint shared by H docs costs at most
     min(H, cap)^2 pairs.
     """
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        winnow_fingerprints,
-    )
-
     fps = (
         winnow_fingerprints(docs, k=k, w=w, text_col=text_col, id_col=id_col)
         .select("doc_id", "fp")
@@ -1548,10 +1495,6 @@ def winnow_near_dup_pairs_sql(k: int = 3, w: int = 4, min_shared: int = 2,
                               source_sql: str = "SELECT * FROM documents",
                               ) -> str:
     """DuckDB twin of :func:`winnow_near_dup_pairs` (same cap rule)."""
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        winnow_fingerprints_sql,
-    )
-
     inner = winnow_fingerprints_sql(k=k, w=w, source_sql=source_sql)
     return f"""
 WITH fps AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM ({inner})),
@@ -1598,10 +1541,6 @@ def winnow_near_dup_pairs_incremental(new_docs: DataFrame,
     contract), and ``existing_fps`` must be distinct: each row counts
     as one shared fingerprint.
     """
-    from cardinality_estimation_evaluation_framework_spark.operators.text import (
-        winnow_fingerprints,
-    )
-
     new_fps = (
         winnow_fingerprints(new_docs, k=k, w=w, text_col=text_col,
                             id_col=id_col)

@@ -3,6 +3,14 @@
 All hot-path operators are pure Catalyst column expressions (whole-stage
 codegen, no Python).
 
+Every word-level operator here, in ``dedup``, ``decontam`` and
+``datagen.tokens``, and every DuckDB twin of one, reads words through ONE
+tokenizer (lowercase, split on ``TOKEN_SPLIT_RE``, drop empties):
+:func:`words` in Spark (:func:`explode_words` for one row per word) and
+:func:`words_sql` in DuckDB, which tokenize identically (pinned in
+``tests/test_token_roundtrip.py``). Every word n-gram starts at an index
+of ONE window, :func:`gram_starts`.
+
 Language ID is an n-gram/stopword-ratio heuristic: per-language stopword
 regex hit counts normalized by token count, argmax with a deterministic
 tie-break — expressible identically in ANSI SQL for the DuckDB oracle
@@ -21,7 +29,8 @@ LANG_MARKERS = {
     "es": ["el", "la", "los", "que", "es"],
 }
 
-WORD_RE = "[a-z0-9]+"
+#: the word separator: anything but [a-z0-9] after lowercasing
+TOKEN_SPLIT_RE = "[^a-z0-9]+"
 # BPE-ish token pieces: runs of letters, runs of digits, or single punctuation
 BPE_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
@@ -42,6 +51,59 @@ def _count_regex_sql(col: str, pattern: str) -> str:
     )
 
 
+def _split_lower(text_col: str) -> Column:
+    """``text_col`` lowercased and split on ``TOKEN_SPLIT_RE``: the words,
+    and empty pieces where the text starts or ends with a separator or is
+    empty."""
+    return F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE)
+
+
+def words(text_col: str = "text") -> Column:
+    """array<string> of the words of ``text_col``: lowercase, split on
+    ``TOKEN_SPLIT_RE``, drop empties. NULL text gives NULL."""
+    return F.filter(_split_lower(text_col), lambda x: x != "")
+
+
+def explode_words(df: DataFrame, *cols, text_col: str = "text",
+                  pos: bool = False) -> DataFrame:
+    """``cols`` plus one row per word of ``text_col`` (column ``tok``), in
+    text order; with ``pos``, also its index among the split pieces
+    (``pos``, a sort key: it counts a dropped leading empty piece). The
+    same words as :func:`words`, but the empty pieces are dropped AFTER
+    the explode: an explode over words()'s filter lambda leaves
+    whole-stage codegen, and an explode + group-by over 200k short docs
+    ran 1.46x slower that way (median of 5, local[4])."""
+    gen = (F.posexplode(_split_lower(text_col)).alias("pos", "tok") if pos
+           else F.explode(_split_lower(text_col)).alias("tok"))
+    return df.select(*cols, gen).where(F.col("tok") != "")
+
+
+def _lower_sql(text_col: str) -> str:
+    """DuckDB ``lower`` that folds U+0130 (capital I with dot above) as
+    the JVM does, to ``i`` + U+0307: DuckDB folds it to a bare ``i``, so
+    ``'İstanbul'`` would tokenize to ``['istanbul']`` there and to
+    ``['i', 'stanbul']`` in Spark. Over all 1,112,063 code points it is
+    the only one whose tokens differ between the two engines (Spark
+    4.1.2, DuckDB 1.0.0)."""
+    return f"lower(replace({text_col}, chr(304), 'i' || chr(775)))"
+
+
+def words_sql(text_col: str = "text") -> str:
+    """DuckDB twin of :func:`words`: the same words, in the same order."""
+    return (
+        f"list_filter(string_split_regex({_lower_sql(text_col)}, "
+        f"'{TOKEN_SPLIT_RE}'), x -> x <> '')"
+    )
+
+
+def gram_starts(size: Column, n: int) -> Column:
+    """0-based start indexes ``0 .. size-n`` of the word n-grams of a
+    ``size``-word array; EMPTY below n words. The guard matters: Spark's
+    ``sequence(0, -1)`` is DESCENDING (``[0, -1]``), not empty."""
+    return F.when(size >= n, F.sequence(F.lit(0), size - n)).otherwise(
+        F.array().cast("array<int>"))
+
+
 def gram_at(arr, i, n: int) -> Column:
     """Space-joined word n-gram of array column ``arr`` starting at
     0-based index ``i`` (a lambda variable) — built from n element_at
@@ -55,6 +117,28 @@ def gram_at(arr, i, n: int) -> Column:
                               for j in range(n)])
 
 
+def _gram_hash_array(wds: Column, n: int, gram_hash) -> Column:
+    """array<long> of ``gram_hash(wd, i)`` over every word n-gram start i
+    of the row's word array ``wds`` (empty below n words), bound as ``wd``
+    ONCE per row as a transform lambda variable. The obvious two-step
+    select (words.alias("wd") then transform over col("wd")) is a stacked
+    Project that CollapseProject merges, inlining filter(split(text))
+    into EVERY element_at inside the gram lambda — a full regex split of
+    the document per gram element, O(k * n_tok^2). A 1M-token doc burned
+    40+ CPU-minutes inside StringSplit that way. transform(array(words),
+    wd -> ...) evaluates the split once and every wd reference reads the
+    bound value."""
+    return F.element_at(
+        F.transform(
+            F.array(wds),
+            lambda wd: F.transform(
+                gram_starts(F.size(wd), n), lambda i: gram_hash(wd, i)
+            ),
+        ),
+        1,
+    )
+
+
 def gram_hash_arrays(docs: DataFrame, n: int, gram_hash,
                      text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
@@ -66,24 +150,12 @@ def gram_hash_arrays(docs: DataFrame, n: int, gram_hash,
     ``gram_hash``: callable (word-array lambda var, 0-based start index)
     -> hash Column; callers choose string-gram hashing
     (``gram_hash(gram_at(wd, i, n))``-style) or multi-column hashing over
-    the window's words. The word array is bound as a transform lambda
-    variable so CollapseProject cannot inline filter(split(text)) into
-    every element access — the measured O(k*n_tok^2) hazard; see
-    :func:`winnow_fingerprints` for the idiom's history. Docs with fewer
-    than n words get an empty array (callers decide whether they emit)."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
-
-    def ghs_of(wd):
-        gidx = F.when(
-            F.size(wd) >= n, F.sequence(F.lit(0), F.size(wd) - n)
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(gidx, lambda i: gram_hash(wd, i))
-
-    ghs = F.element_at(F.transform(F.array(words), ghs_of), 1)
+    the window's words. The word array is bound as a lambda variable
+    (:func:`_gram_hash_array`). Docs with fewer than n words get an empty
+    array (callers decide whether they emit)."""
     return docs.select(
-        F.col(id_col).cast("string").alias("doc_id"), ghs.alias("ghs")
+        F.col(id_col).cast("string").alias("doc_id"),
+        _gram_hash_array(words(text_col), n, gram_hash).alias("ghs"),
     )
 
 
@@ -106,8 +178,7 @@ def duckdb_tok_ctes(prefix: str = "",
     # test_source_overlap_matrix_duckdb_twin)
     return f"""{p}words AS (
   SELECT {key_expr} AS {key_name}, ROW_NUMBER() OVER () AS _rid,
-         list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'),
-                     x -> x <> '') AS w
+         {words_sql(text_col)} AS w
   FROM ({source_sql})
 ),
 {p}tok AS (
@@ -169,10 +240,10 @@ def _lang_scores(t: Column) -> dict[str, Column]:
     lowered = F.lower(t)
     return {
         lang: F.coalesce(
-            F.regexp_count(lowered, F.lit(rf"\b({'|'.join(words)})\b")),
+            F.regexp_count(lowered, F.lit(rf"\b({'|'.join(markers)})\b")),
             F.lit(0),
         )
-        for lang, words in LANG_MARKERS.items()
+        for lang, markers in LANG_MARKERS.items()
     }
 
 
@@ -206,7 +277,7 @@ def lang_id_sql(text_col: str = "text") -> str:
         alt = "|".join(LANG_MARKERS[lang])
         pat = rf"\b({alt})\b"
         # coalesce: NULL text -> 0 on both engines (see _lang_scores)
-        return f"coalesce({_count_regex_sql(f'lower({text_col})', pat)}, 0)"
+        return f"coalesce({_count_regex_sql(_lower_sql(text_col), pat)}, 0)"
 
     scores = {lang: score(lang) for lang in langs}
     gmax = "greatest(" + ", ".join(scores[lang] for lang in langs) + ")"
@@ -241,7 +312,7 @@ def quality_score_sql(text_col: str = "text") -> str:
     n_words = f"len(list_filter(string_split_regex({text_col}, '\\s+'), x -> x <> ''))"
     n_punct = _count_regex_sql(text_col, r"[^a-zA-Z0-9\s]")
     stop_alt = "|".join(LANG_MARKERS["en"])
-    stop = _count_regex_sql(f"lower({text_col})", rf"\b({stop_alt})\b")
+    stop = _count_regex_sql(_lower_sql(text_col), rf"\b({stop_alt})\b")
     return (
         "round("
         f"(CASE WHEN {n_chars} >= 50 AND {n_chars} <= 100000 THEN 0.25 ELSE 0.0 END)"
@@ -261,7 +332,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def fingerprint_sql(text_col: str = "text") -> str:
-    return f"md5(trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g')))"
+    return f"md5(trim(regexp_replace({_lower_sql(text_col)}, '\\s+', ' ', 'g')))"
 
 
 def _dup_frac(arr: Column) -> Column:
@@ -299,30 +370,23 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
     on doc_id (map-side combined) and a broadcast-size join back.
     Null/short texts get 0.0 for every signal.
     """
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                     lambda x: x != "")
     lines = F.filter(F.split(F.col(text_col), r"\n"),
                      lambda x: F.trim(x) != "")
     paras = F.filter(F.split(F.col(text_col), r"\n{2,}"),
                      lambda x: F.trim(x) != "")
     base = (
-        df.withColumn("_w", words)
+        df.withColumn("_w", words(text_col))
         .withColumn("word_rep_frac", _dup_frac(F.col("_w")))
         .withColumn("dup_line_frac", _dup_frac(lines))
         .withColumn("dup_para_frac", _dup_frac(paras))
     )
     out = base
     for n, out_name in TOP_NGRAM_COLS.items():
-        # empty index array for docs with < n words (sequence(0, -n+1)
-        # would be DESCENDING and slice(start=0) throws — same guard as
-        # word_ngrams)
-        idxs = F.when(
-            F.size("_w") >= n, F.sequence(F.lit(0), F.size("_w") - n)
-        ).otherwise(F.array().cast("array<int>"))
         grams = base.select(
             F.col(id_col).alias("_bid"),
             F.explode(
-                F.transform(idxs, lambda i: gram_at("_w", i, n))
+                F.transform(gram_starts(F.size("_w"), n),
+                            lambda i: gram_at("_w", i, n))
             ).alias("bg"),
         )
         per_doc = (
@@ -380,8 +444,7 @@ gstats{n} AS (
     return f"""
 WITH base AS MATERIALIZED (
   SELECT CAST({id_col} AS VARCHAR) AS doc_id,
-         list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'),
-                     x -> x <> '') AS w,
+         {words_sql(text_col)} AS w,
          {dup_frac_sql(lines)} AS dup_line_frac,
          {dup_frac_sql(paras)} AS dup_para_frac
   FROM ({source_sql})
@@ -427,13 +490,8 @@ def unigram_drift(docs: DataFrame, text_col: str = "text",
     #sources per token — and broadcasts for the #sources-row totals and
     the 1-row corpus total. No collect, no window, no Python.
     """
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    toks = docs.select(
-        F.col(source_col).cast("string").alias("source"),
-        F.explode(words).alias("tok"),
-    )
+    toks = explode_words(docs, F.col(source_col).cast("string").alias("source"),
+                         text_col=text_col)
     # `per` feeds three consumers (tot, glob, the join): persist it so the
     # explode + (source, tok) aggregation over the full corpus runs once,
     # not three times — the same discipline minhash_dedup_pairs applies to
@@ -483,8 +541,7 @@ def unigram_drift_sql(text_col: str = "text", source_col: str = "source",
 WITH toks AS (
   SELECT source, unnest(w) AS tok FROM (
     SELECT CAST({source_col} AS VARCHAR) AS source,
-           list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'),
-                       x -> x <> '') AS w
+           {words_sql(text_col)} AS w
     FROM ({source_sql})
   )
 ),
@@ -522,13 +579,8 @@ def with_self_information(docs: DataFrame, text_col: str = "text",
     token totals shuffle on tok (skew = a token's doc spread, the same
     bound as any vocabulary agg) and the 1-row corpus total broadcasts.
     """
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    toks = docs.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.explode(words).alias("tok"),
-    )
+    toks = explode_words(docs, F.col(id_col).cast("string").alias("doc_id"),
+                         text_col=text_col)
     per = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("c_dt"))
     gtot = per.groupBy("tok").agg(F.sum("c_dt").alias("c_t"))
     big_n = gtot.agg(F.sum("c_t").alias("n_corpus"))
@@ -553,8 +605,7 @@ def self_information_sql(text_col: str = "text", id_col: str = "doc_id",
 WITH toks AS (
   SELECT doc_id, unnest(w) AS tok FROM (
     SELECT CAST({id_col} AS VARCHAR) AS doc_id,
-           list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'),
-                       x -> x <> '') AS w
+           {words_sql(text_col)} AS w
     FROM ({source_sql})
   )
 ),
@@ -573,6 +624,47 @@ GROUP BY doc_id
 # --------------------------------------------------------------------------
 # Winnowing fingerprints (Schleimer/Wilkerson/Aiken 2003, MOSS)
 # --------------------------------------------------------------------------
+
+def _winnow_hashes(wds: Column, k: int) -> Column:
+    """Per-row array of the winnowing hashes: the top 53 bits of the
+    portable md5-u64 of every word k-gram of the word array ``wds``."""
+    from cardinality_estimation_evaluation_framework_spark.hashing import (
+        md5_u64_spark,
+    )
+
+    return _gram_hash_array(
+        wds, k,
+        lambda wd, i: F.shiftrightunsigned(md5_u64_spark(gram_at(wd, i, k)), 11),
+    )
+
+
+def _leftmost_mins(hs: Column, w: int) -> Column:
+    """array<struct<pos, fp>>: the LEFTMOST minimum of every window of
+    ``w`` consecutive entries of the hash array ``hs`` (pos 1-based), by
+    a strict-< fold. Fewer than w hashes form one whole-array window (w
+    clamps); an empty ``hs`` selects nothing."""
+    wlen = F.least(F.lit(w), F.size(hs))
+    # an empty hs would still start one window, at 1, and element_at past
+    # the array raises under ANSI mode; and sequence(1, 0) is DESCENDING
+    # ([1, 0]) in Spark, so a one-gram window folds an empty offset list
+    starts = F.when(
+        F.size(hs) > 0, F.sequence(F.lit(1), F.size(hs) - wlen + 1)
+    ).otherwise(F.array().cast("array<int>"))
+    offsets = F.when(wlen >= 2, F.sequence(F.lit(1), wlen - 1)).otherwise(
+        F.array().cast("array<int>"))
+    return F.transform(
+        starts,
+        lambda j: F.aggregate(
+            offsets,
+            F.struct(j.alias("pos"), F.element_at(hs, j).alias("fp")),
+            lambda acc, t: F.when(
+                F.element_at(hs, j + t) < acc["fp"],
+                F.struct((j + t).alias("pos"),
+                         F.element_at(hs, j + t).alias("fp")),
+            ).otherwise(acc),
+        ),
+    )
+
 
 def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4,
                         text_col: str = "text",
@@ -600,62 +692,17 @@ def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4,
     (doc, pos, fp) — and that can be dropped entirely by callers that
     feed the exploded stream straight into a groupBy.
     """
-    from cardinality_estimation_evaluation_framework_spark.hashing import (
-        md5_u64_spark,
-    )
-
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    # The word array is bound ONCE per row as a lambda variable. The
-    # obvious two-step select (words.alias("wd") then transform over
-    # col("wd")) is a stacked Project that CollapseProject merges,
-    # inlining filter(split(text)) into EVERY element_at inside the
-    # gram lambda — a full regex split of the document per gram element,
-    # O(k * n_tok^2). A 1M-token doc burned 40+ CPU-minutes inside
-    # StringSplit that way. transform(array(words), wd -> ...) evaluates
-    # the split once and every wd reference reads the bound value.
-    hs = F.element_at(
-        F.transform(
-            F.array(words),
-            lambda wd: F.transform(
-                F.when(
-                    F.size(wd) >= k, F.sequence(F.lit(0), F.size(wd) - k)
-                ).otherwise(F.array().cast("array<int>")),
-                lambda i: F.shiftrightunsigned(
-                    md5_u64_spark(gram_at(wd, i, k)), 11
-                ),
-            ),
-        ),
-        1,
-    )
+    wds = words(text_col)
+    hs = _winnow_hashes(wds, k)
     # pre-filter on word count (one split, linear) instead of on the
     # derived hs array (whole gram chain inlined into the predicate)
-    doc = docs.where(F.size(words) >= k).select(
+    doc = docs.where(F.size(wds) >= k).select(
         F.col(id_col).cast("string").alias("doc_id"), hs.alias("hs")
     )
-    wlen = F.least(F.lit(w), F.size("hs"))
-    starts = F.sequence(F.lit(1), F.size("hs") - wlen + 1)
-    # sequence(1, 0) would generate a DESCENDING [1, 0] in Spark, indexing
-    # past the window — guard the single-gram case with an empty fold
-    offsets = F.when(wlen >= 2, F.sequence(F.lit(1), wlen - 1)).otherwise(
-        F.array().cast("array<int>"))
-    sel = F.transform(
-        starts,
-        lambda j: F.aggregate(
-            offsets,
-            F.struct(j.alias("pos"), F.element_at("hs", j).alias("fp")),
-            lambda acc, t: F.when(
-                F.element_at("hs", j + t) < acc["fp"],
-                F.struct((j + t).alias("pos"),
-                         F.element_at("hs", j + t).alias("fp")),
-            ).otherwise(acc),
-        ),
-    )
     return (
-        doc.select("doc_id", F.explode(sel).alias("s"))
+        doc.select("doc_id", F.explode(_leftmost_mins(F.col("hs"), w)).alias("s"))
         .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
         .distinct()
     )
@@ -671,58 +718,19 @@ def winnow_fp_array(text_col: str = "text", k: int = 3, w: int = 4) -> Column:
     row-locally.
 
     Both the word array and the gram-hash array are bound as transform
-    lambda variables (nested): written as stacked selects or one flat
-    expression, CollapseProject would inline filter(split(text)) — and
-    then the whole hash transform — into every element access,
-    re-tokenizing the document per gram element (the O(k*n^2) hazard
-    measured at 40+ CPU-minutes for one 1M-token doc; see
-    winnow_fingerprints).
+    lambda variables: written as stacked selects or one flat expression,
+    CollapseProject would inline filter(split(text)) — and then the whole
+    hash transform — into every element access, re-tokenizing the
+    document per gram element (the O(k*n^2) hazard of
+    :func:`_gram_hash_array`).
     """
-    from cardinality_estimation_evaluation_framework_spark.hashing import (
-        md5_u64_spark,
-    )
-
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
-
-    def hs_of(wd):
-        gidx = F.when(
-            F.size(wd) >= k, F.sequence(F.lit(0), F.size(wd) - k)
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(
-            gidx,
-            lambda i: F.shiftrightunsigned(md5_u64_spark(gram_at(wd, i, k)), 11),
-        )
-
-    def fps_of(hs):
-        wlen = F.least(F.lit(w), F.size(hs))
-        starts = F.when(
-            F.size(hs) > 0, F.sequence(F.lit(1), F.size(hs) - wlen + 1)
-        ).otherwise(F.array().cast("array<int>"))
-        offsets = F.when(wlen >= 2, F.sequence(F.lit(1), wlen - 1)).otherwise(
-            F.array().cast("array<int>"))
-        sel = F.transform(
-            starts,
-            lambda j: F.aggregate(
-                offsets,
-                F.struct(j.alias("pos"), F.element_at(hs, j).alias("fp")),
-                lambda acc, t: F.when(
-                    F.element_at(hs, j + t) < acc["fp"],
-                    F.struct((j + t).alias("pos"),
-                             F.element_at(hs, j + t).alias("fp")),
-                ).otherwise(acc),
-            ),
-        )
-        return F.array_distinct(F.transform(sel, lambda s: s["fp"]))
-
     return F.element_at(
         F.transform(
-            F.array(words),
-            lambda wd: F.element_at(
-                F.transform(F.array(hs_of(wd)), fps_of), 1
+            F.array(_winnow_hashes(words(text_col), k)),
+            lambda hs: F.array_distinct(
+                F.transform(_leftmost_mins(hs, w), lambda s: s["fp"])
             ),
         ),
         1,
@@ -801,15 +809,10 @@ def zipf_slope_by_source(docs: DataFrame, text_col: str = "text",
     usual explode + two-level map-side-combined aggregate; the OLS
     moments are m-weighted sums folded in the final per-source agg.
     """
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
     from pyspark.sql.window import Window
 
-    toks = docs.select(
-        F.col(source_col).cast("string").alias("source"),
-        F.explode(words).alias("tok"),
-    )
+    toks = explode_words(docs, F.col(source_col).cast("string").alias("source"),
+                         text_col=text_col)
     freq = toks.groupBy("source", "tok").agg(F.count("*").alias("freq"))
     hist = freq.groupBy("source", "freq").agg(F.count("*").alias("m"))
     w = Window.partitionBy("source").orderBy(F.col("freq").desc())
@@ -850,8 +853,7 @@ def zipf_slope_sql(text_col: str = "text", source_col: str = "source",
 WITH toks AS (
   SELECT source, unnest(w) AS tok FROM (
     SELECT CAST({source_col} AS VARCHAR) AS source,
-           list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'),
-                       x -> x <> '') AS w
+           {words_sql(text_col)} AS w
     FROM ({source_sql})
   )
 ),

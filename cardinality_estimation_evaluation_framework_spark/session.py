@@ -16,18 +16,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def mem_total_kib(meminfo: str = "/proc/meminfo") -> int | None:
+    """The machine's MemTotal in KiB, or None without a readable meminfo."""
+    try:
+        with open(meminfo) as f:
+            return next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return None
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Half of the machine's MemTotal in whole GB (at least ``1g``), the
     driver heap used unless $SPARK_DRIVER_MEMORY is set. A fixed heap larger
     than the box lets the JVM grow until the kernel's OOM killer stops it.
     Without a readable meminfo the floor is used."""
-    try:
-        with open(meminfo) as f:
-            kib = next(int(line.split()[1]) for line in f
-                       if line.startswith("MemTotal:"))
-    except (OSError, StopIteration):
-        return "1g"
-    return f"{max(1, kib // 2 // (1 << 20))}g"
+    kib = mem_total_kib(meminfo)
+    return "1g" if kib is None else f"{max(1, kib // 2 // (1 << 20))}g"
 
 
 def get_spark(

@@ -1022,6 +1022,28 @@ def test_decontam_short_docs_get_zero_rows(spark):
         assert want[did][1] == row["n_grams"] and want[did][2] == row["n_hits"]
 
 
+def test_decontam_exact_twin_keeps_grams_inside_each_row(spark):
+    """Two rows that share a doc_id never form a gram across each other,
+    on either engine: each row here has 3 words, so no 4-gram exists."""
+    import duckdb
+
+    from cardinality_estimation_evaluation_framework_spark.operators import (
+        decontam,
+    )
+
+    df = spark.createDataFrame(
+        [("7", "alpha beta gamma"), ("7", "delta epsilon zeta")],
+        "doc_id string, text string",
+    )
+    got = [(r["doc_id"], r["n_grams"]) for r in
+           decontam.ngram_overlap_exact(df, df, n=4).collect()]
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    want = con.sql(decontam.ngram_overlap_exact_sql(n=4)).fetchall()
+    assert got == [("7", 0)]
+    assert [(r[0], r[1]) for r in want] == [("7", 0)]
+
+
 def test_decode_stub_unsupported_variant_raises_seam_error():
     """A payload whose header magic matches but whose variant the codec
     rejects surfaces the DOCUMENTED NotImplementedError, never a raw

@@ -50,7 +50,6 @@ KEPT_DEFINITIONS = {
     "config_grids.liquid_legions_sequential": "mirrors a reference grid",
     "hashing.farmhash_or_none": "bit-exact farmhash parity when installed",
     "stratified.build_stratified": _FLOOR,
-    "tokens.tokenize_vocab": _FLOOR,
     "text.winnow_fp_array": _FLOOR + "; only the streaming module calls it",
     "sql_sketch.countmin_state_sql": _FLOOR,
     "sql_sketch.countmin_query_sql": _FLOOR,
@@ -164,3 +163,14 @@ def test_every_public_definition_is_named_outside_the_tests():
                     and unused(fn))
     assert sorted(set(unnamed) - set(KEPT_DEFINITIONS)) == []
     assert sorted(set(KEPT_DEFINITIONS) - set(unnamed)) == []
+
+
+def test_tokenizer_regex_is_written_once():
+    """One tokenizer: its separator regex is spelled out only in
+    operators/text.py (``TOKEN_SPLIT_RE``); every other package or tools
+    source reads words through ``text.words`` / ``text.words_sql``."""
+    home = ROOT / PKG / "operators" / "text.py"
+    sources = [*(ROOT / PKG).rglob("*.py"), *(ROOT / "tools").rglob("*.py")]
+    copies = sorted(str(p.relative_to(ROOT)) for p in sources
+                    if p != home and "[^a-z0-9]+" in p.read_text())
+    assert copies == []

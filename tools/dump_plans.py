@@ -9,14 +9,16 @@ the package in the checkout this script sits in, so for a "before" dump
 run a copy of it inside a checkout of the parent commit. Every builder is
 planned in a fresh process (its own JVM), so the plan_ids of two checkouts
 line up, on local[4] with AQE off (the formatted plan is then the one that
-runs, not an AdaptiveSparkPlan placeholder). Expression ids are renumbered
-in order of first appearance and scan paths cut to the file name, so a
-diff shows only what the code changed.
+runs, not an AdaptiveSparkPlan placeholder). Expression ids and the
+suffixes of lambda variables (``x_12``) are renumbered in order of first
+appearance and scan paths cut to the file name, so a diff shows only what
+the code changed.
 """
 
 from __future__ import annotations
 
 import contextlib
+import importlib
 import io
 import os
 import re
@@ -24,6 +26,7 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "cardinality_estimation_evaluation_framework_spark"
 CORES = 4
 
 
@@ -53,6 +56,26 @@ def _minhash_signatures(spark, docs):
         docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")))
 
 
+def _on_docs(module: str, name: str):
+    """(header, plan function) for ``module.name(docs)`` at its defaults."""
+    return f"{name}(docs)", lambda spark, docs: getattr(
+        importlib.import_module(f"{PKG}.{module}"), name)(docs)
+
+
+#: the operators that read words through the text tokenizer (text.words)
+_TOKENIZER_CONSUMERS = [
+    ("operators.dedup", "word_ngrams"),
+    ("operators.dedup", "simhash_signatures"),
+    ("operators.dedup", "dup_span_stats"),
+    ("operators.dedup", "source_overlap_matrix"),
+    ("operators.text", "winnow_fingerprints"),
+    ("operators.text", "with_repetition_stats"),
+    ("operators.text", "unigram_drift"),
+    ("operators.text", "with_self_information"),
+    ("operators.text", "zipf_slope_by_source"),
+    ("datagen.tokens", "tokenize_vocab"),
+]
+
 #: builder -> (the call as printed in the header, plan function)
 BUILDERS = {
     "sketch_partials": (
@@ -64,14 +87,19 @@ BUILDERS = {
         "minhash_signatures(cached(docs.select(doc_id cast string, text)))",
         _minhash_signatures,
     ),
+    **{name: _on_docs(module, name) for module, name in _TOKENIZER_CONSUMERS},
 }
 
 
 def normalise(plan: str) -> str:
-    """Renumber expression ids by first appearance; cut scan paths to the
-    file name."""
+    """Renumber expression ids and lambda-variable suffixes by first
+    appearance; cut scan paths to the file name."""
     ids: dict[str, str] = {}
     plan = re.sub(r"#(\d+)", lambda m: "#" + ids.setdefault(m[1], str(len(ids) + 1)), plan)
+    lambdas: dict[str, str] = {}
+    plan = re.sub(r"\b([xyz])_(\d+)\b",
+                  lambda m: f"{m[1]}_" + lambdas.setdefault(m[2], str(len(lambdas) + 1)),
+                  plan)
     return re.sub(r"file:[^\],]*/([^/\],]+)", r"file:\1", plan)
 
 

@@ -63,7 +63,7 @@ from cardinality_estimation_evaluation_framework_spark.sketches.vector_of_counts
 )
 
 # vocabulary mixing language markers (so lang-ID is non-trivial), digits,
-# and plain filler — word split on both engines is [^a-z0-9]+
+# and plain filler — both engines split words with text.words / words_sql
 _WORDS = (
     "the and of to is der die und das el la los que le et les est "
     "alpha beta gamma delta data spark duck oracle fuzz gate word "
@@ -78,6 +78,9 @@ _SPECIALS = [
     "The THE the tHe",  # case folding
     "dup line\ndup line\nother\n\npara\n\npara",  # line/paragraph dups
     "  \n \n\n  ",  # whitespace-only lines
+    # the two non-ASCII code points whose lowercase holds [a-z0-9]: U+0130
+    # (JVM: i + U+0307) and U+212A KELVIN SIGN (k)
+    "\u0130stanbul \u0130ZM\u0130R 300\u212a \u212aelvin",
 ]
 
 
@@ -647,16 +650,6 @@ WHERE d.doc_id NOT IN (
         compare(got, con, sql)
 
 
-_TOK_CTE = """
-tok_raw AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
-         unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tok
-  FROM documents
-),
-toks AS (SELECT doc_id, source, tok FROM tok_raw WHERE tok <> '')
-"""
-
-
 def fam_frequency(rng, spark, con):
     """heavy_hitters_exact top-k (random k incl. k > vocab) and the k+
     reach histogram (random k range) on a random corpus."""
@@ -674,7 +667,7 @@ def fam_frequency(rng, spark, con):
     con.register("documents", pdf)
     got = heavy_hitters_exact(toks.select(F.col("tok").alias("item")), k=k)
     sql = (
-        f"WITH {_TOK_CTE} SELECT tok AS item, CAST(count(*) AS BIGINT) AS cnt, "
+        f"WITH {tk.TOKENS_CTE_DUCKDB} SELECT tok AS item, CAST(count(*) AS BIGINT) AS cnt, "
         f"CAST(row_number() OVER (ORDER BY count(*) DESC, tok ASC) AS INT) AS rank "
         f"FROM toks GROUP BY tok ORDER BY cnt DESC, item ASC LIMIT {k}"
     )
@@ -690,7 +683,7 @@ def fam_frequency(rng, spark, con):
         .agg(F.sum("cnt").cast("long").alias("kplus_reach"))
     )
     sql2 = (
-        f"WITH {_TOK_CTE}, hist AS (SELECT freq, count(*) AS cnt FROM ("
+        f"WITH {tk.TOKENS_CTE_DUCKDB}, hist AS (SELECT freq, count(*) AS cnt FROM ("
         f"SELECT tok, count(*) AS freq FROM toks GROUP BY tok) GROUP BY freq) "
         f"SELECT gs.k, CAST(sum(hist.cnt) AS BIGINT) AS kplus_reach "
         f"FROM generate_series(1, {kmax}) gs(k) JOIN hist ON hist.freq >= gs.k "

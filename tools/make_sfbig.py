@@ -17,6 +17,10 @@ irrelevant to correctness; distribution shape is what matters.
 Output: one parquet FILE per table (row groups sized so Spark still gets
 parallel splits; DuckDB read_parquet wants files, not directories).
 
+DuckDB runs with a memory limit of a quarter of the machine's MemTotal,
+not its default 80% of RAM: the build runs beside Spark gates, and at the
+default it was killed by the kernel's OOM killer while writing lineitem.
+
 Usage: python tools/make_sfbig.py [out_dir] [copies]   (default .sfbig 10)
 """
 
@@ -28,6 +32,9 @@ import sys
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from cardinality_estimation_evaluation_framework_spark.session import mem_total_kib
 
 SRC = "/root/testdata/sf0.1"
 KEY_SHIFT = 10_000_000
@@ -79,6 +86,9 @@ def main() -> int:
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out_dir, exist_ok=True)
     con = duckdb.connect()
+    kib = mem_total_kib()
+    if kib is not None:
+        con.execute(f"SET memory_limit = '{kib // 4}KiB'")
     for t in COPY_AS_IS:
         con.execute(f"""
             COPY (SELECT * FROM read_parquet('{SRC}/{t}.parquet'))
