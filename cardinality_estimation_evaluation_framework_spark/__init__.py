@@ -5,8 +5,9 @@ world-federation-of-advertisers/cardinality_estimation_evaluation_framework
 (the "reference", read-only at /root/reference) as idiomatic PySpark:
 
 - sketches are mergeable, associative aggregation states (small numpy vectors)
-  built per-partition by Arrow-vectorized ``mapInPandas`` kernels and merged by
-  a treeAggregate-style reduction (``operators.aggregate``);
+  built per-partition by ``mapInArrow`` kernels, which read array columns
+  through ``aggregate.flat``, and merged by a treeAggregate-style reduction
+  (``operators.aggregate``);
 - estimators are driver-side numpy functions over the tiny merged state;
 - set generators / simulator / evaluator / analyzer are Spark DataFrame jobs.
 

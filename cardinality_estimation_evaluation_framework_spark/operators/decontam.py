@@ -31,13 +31,14 @@ check rides the scan.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from cardinality_estimation_evaluation_framework_spark.hashing import hash64
 from cardinality_estimation_evaluation_framework_spark.operators import (
     aggregate as agg,
 )
+from cardinality_estimation_evaluation_framework_spark.operators.aggregate import flat
 from cardinality_estimation_evaluation_framework_spark.operators.dedup import (
     word_ngrams,
 )
@@ -86,7 +87,7 @@ def build_benchmark_bloom(bench_docs: DataFrame, n: int = 8,
                           id_col: str = "doc_id",
                           input_partitions: int | None = None) -> dict:
     """Distributed Bloom build over the benchmark's gram hashes
-    (mapInPandas partials + tree merge — the engine's standard harness).
+    (mapInArrow partials + tree merge — the engine's standard harness).
     Returns the merged kernel state.
 
     No distinct runs first: a Bloom insert is idempotent, so repeated
@@ -99,10 +100,8 @@ def build_benchmark_bloom(bench_docs: DataFrame, n: int = 8,
     input's partition count; pass ``input_partitions`` for a genuinely huge
     benchmark set."""
     kernel = kernel or bloom_kernel()
-    items = _gram_hash_arrays(bench_docs, n, text_col, id_col).select(
-        F.explode("ghs").alias("item")
-    )
-    return agg.sketch(items, kernel, input_partitions=input_partitions or 1)
+    ghs = _gram_hash_arrays(bench_docs, n, text_col, id_col)
+    return agg.sketch(ghs, kernel, col="ghs", input_partitions=input_partitions or 1)
 
 
 def _pack_bits(state: dict, kernel: BloomKernel) -> np.ndarray:
@@ -142,47 +141,30 @@ def flag_contaminated_bloom(docs: DataFrame, bloom_state: dict,
 
     def probe(batches):
         bits = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cells = pdf["ghs"].to_numpy()
-            sizes = np.fromiter(
-                (0 if c is None else len(c) for c in cells),
-                dtype=np.int64, count=len(cells),
+        for batch in batches:
+            gh, codes = flat(batch, "ghs")
+            # row-local distinct (doc, gram-hash): sort, keep firsts
+            order = np.lexsort((gh, codes))
+            sc, sg = codes[order], gh[order]
+            first = np.ones(len(sc), dtype=bool)
+            first[1:] = (sc[1:] != sc[:-1]) | (sg[1:] != sg[:-1])
+            codes_u, gh_u = sc[first], sg[first].view(np.uint64)
+            member = np.ones(len(gh_u), dtype=bool)
+            for i in range(num_hashes):
+                idx = dist.indexes(
+                    hash64(gh_u, seed=seed * 1_000_003 + i)
+                ).astype(np.int64)
+                hit = (bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
+                member &= hit.astype(bool)
+            ndocs = batch.num_rows
+            n_grams = np.bincount(codes_u, minlength=ndocs)
+            n_hits = np.bincount(codes_u, weights=member, minlength=ndocs)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), pa.array(n_grams), pa.array(n_hits.astype(np.int64))],
+                names=["doc_id", "n_grams", "n_hits"],
             )
-            ndocs = len(cells)
-            keep = sizes > 0
-            if keep.any():
-                gh = np.concatenate(
-                    [np.asarray(c, dtype=np.int64) for c in cells[keep]]
-                )
-                codes = np.repeat(np.flatnonzero(keep), sizes[keep])
-                # row-local distinct (doc, gram-hash): sort, keep firsts
-                order = np.lexsort((gh, codes))
-                sc, sg = codes[order], gh[order]
-                first = np.concatenate(
-                    ([True], (sc[1:] != sc[:-1]) | (sg[1:] != sg[:-1]))
-                )
-                codes_u, gh_u = sc[first], sg[first].view(np.uint64)
-                member = np.ones(len(gh_u), dtype=bool)
-                for i in range(num_hashes):
-                    idx = dist.indexes(
-                        hash64(gh_u, seed=seed * 1_000_003 + i)
-                    ).astype(np.int64)
-                    hit = (bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
-                    member &= hit.astype(bool)
-                n_grams = np.bincount(codes_u, minlength=ndocs)
-                n_hits = np.bincount(codes_u, weights=member, minlength=ndocs)
-            else:
-                n_grams = np.zeros(ndocs, dtype=np.int64)
-                n_hits = np.zeros(ndocs, dtype=np.float64)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "n_grams": n_grams.astype(np.int64),
-                "n_hits": n_hits.astype(np.int64),
-            })
 
-    partial = gh_docs.mapInPandas(
+    partial = gh_docs.mapInArrow(
         probe, schema="doc_id string, n_grams long, n_hits long"
     )
     agg_df = partial.groupBy("doc_id").agg(

@@ -34,6 +34,8 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
 from cardinality_estimation_evaluation_framework_spark.hashing import (
@@ -45,6 +47,8 @@ from cardinality_estimation_evaluation_framework_spark.hashing import (
     u64_to_i64_duckdb,
 )
 from cardinality_estimation_evaluation_framework_spark.operators.aggregate import (
+    flat,
+    list_rows,
     spread_partitions,
 )
 from cardinality_estimation_evaluation_framework_spark.operators.text import (
@@ -292,37 +296,29 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
     )
 
     def per_batch(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            gh, owner = flat(batch, "ghs")
+            if not len(gh):
                 continue
-            cells = pdf["ghs"].to_numpy()
-            sizes = np.fromiter(
-                (0 if c is None else len(c) for c in cells),
-                dtype=np.int64, count=len(cells),
-            )
-            keep = sizes > 0
-            if not keep.any():
-                continue
-            uniq = pdf["doc_id"].to_numpy()[keep]
-            ksizes = sizes[keep]
-            gh = np.concatenate(
-                [np.asarray(c, dtype=np.int64) for c in cells[keep]]
-            ).view(np.uint64)
-            codes = np.repeat(np.arange(len(uniq)), ksizes)
+            gh = gh.view(np.uint64)
+            rows, codes = np.unique(owner, return_inverse=True)
             # (k, ndocs) layout: each remix scatters into a CONTIGUOUS row
             sigs = np.full(
-                (num_hashes, len(uniq)), np.iinfo(np.int64).max, dtype=np.int64
+                (num_hashes, len(rows)), np.iinfo(np.int64).max, dtype=np.int64
             )
             for k in range(num_hashes):
                 hk = splitmix64(gh, seed * 1_000_003 + k).view(np.int64)
                 np.minimum.at(sigs[k], codes, hk)
-            yield pd.DataFrame({"doc_id": uniq, "sig": list(sigs.T.copy())})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id").take(rows), list_rows(sigs.T)],
+                names=["doc_id", "sig"],
+            )
 
     # partial per input partition, then min-merge per doc (mins are
     # associative). The 64-way merge is ONE parsed SQL expression: built
     # as Column objects it costs a py4j round trip per node (~0.4 s of
     # driver planning per call), for the same optimized plan.
-    partial = doc_ghs.mapInPandas(per_batch, schema="doc_id string, sig array<long>")
+    partial = doc_ghs.mapInArrow(per_batch, schema="doc_id string, sig array<long>")
     merge = ", ".join(f"min(sig[{i}])" for i in range(num_hashes))
     return partial.groupBy("doc_id").agg(F.expr(f"array({merge})").alias("sig"))
 
@@ -619,25 +615,15 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
     ).astype(np.int64)  # (256, 8): bit j of byte value v
 
     def per_batch(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            raw, owner = flat(batch, "ths")
+            if not len(raw):
                 continue
-            cells = pdf["ths"].to_numpy()
-            sizes = np.fromiter(
-                (0 if c is None else len(c) for c in cells),
-                dtype=np.int64, count=len(cells),
+            rows, codes, ksizes = np.unique(
+                owner, return_inverse=True, return_counts=True
             )
-            keep = sizes > 0
-            if not keep.any():
-                continue
-            uniq = pdf["doc_id"].to_numpy()[keep]
-            ksizes = sizes[keep]
-            ndocs = len(uniq)
-            raw = np.concatenate(
-                [np.asarray(c, dtype=np.int64) for c in cells[keep]]
-            ).view(np.uint64)
-            codes = np.repeat(np.arange(ndocs), ksizes)
-            th = splitmix64(raw, seed)
+            ndocs = len(rows)
+            th = splitmix64(raw.view(np.uint64), seed)
             tb = th.view(np.uint8).reshape(-1, 8)  # little-endian bytes
             acc = np.empty((ndocs, 64), dtype=np.int64)
             base = codes << 8
@@ -647,18 +633,22 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
                 ).reshape(ndocs, 256)
                 acc[:, byte * 8:(byte + 1) * 8] = hist @ byte_bits
             acc = 2 * acc - ksizes[:, None]
-            yield pd.DataFrame({"doc_id": uniq, "acc": list(acc)})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id").take(rows), list_rows(acc)],
+                names=["doc_id", "acc"],
+            )
 
-    partial = doc_ths.mapInPandas(per_batch, schema="doc_id string, acc array<long>")
-    # merge partials: sum bit-accumulators per doc, then re-pack
-    merged = partial.groupBy("doc_id").agg(
-        F.array(*[F.sum(F.col("acc")[i]) for i in range(64)]).alias("acc")
+    partial = doc_ths.mapInArrow(per_batch, schema="doc_id string, acc array<long>")
+    # merge partials: sum bit-accumulators per doc, then re-pack. Each is ONE
+    # parsed SQL expression, as in minhash_signatures: ~200 Column objects
+    # would cost a py4j round trip each, for the same optimized plan
+    sums = ", ".join(f"sum(acc[{i}])" for i in range(64))
+    merged = partial.groupBy("doc_id").agg(F.expr(f"array({sums})").alias("acc"))
+    bit = "CASE WHEN acc[{}] > 0 THEN 1 ELSE 0 END * {}"
+    pack = " + ".join(
+        ["0"] + [bit.format(i, 2**i if i < 63 else "-9223372036854775808L") for i in range(64)]
     )
-    pack = sum(
-        (F.when(F.col("acc")[i] > 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**i if i < 63 else -(2**63)))
-        for i in range(64)
-    )
-    return merged.select("doc_id", pack.cast("long").alias("simhash"))
+    return merged.select("doc_id", F.expr(f"CAST({pack} AS BIGINT)").alias("simhash"))
 
 
 def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
@@ -830,12 +820,22 @@ def embedding_near_dup_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
     planes = _hyperplanes(dim, bands * planes_per_band, seed)
     powers = 1 << np.arange(planes_per_band, dtype=np.int64)
 
-    @F.pandas_udf("array<long>")
-    def band_keys(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.to_numpy()).astype(np.float64)
+    @F.arrow_udf("array<long>")
+    def band_keys(vs: pa.Array) -> pa.Array:
+        lens = pc.list_value_length(vs).fill_null(dim).to_numpy()
+        if (lens != dim).any():
+            raise ValueError(
+                f"embedding lengths {sorted(set(lens[lens != dim].tolist()))} "
+                f"differ from the probed dim {dim}")
+        vals, owner = flat(pa.RecordBatch.from_arrays([vs], ["v"]), "v")
+        # a NULL vector, or one with a NULL element, gets NULL band keys,
+        # so the posexplode drops it and it forms no pair
+        full = np.bincount(owner, minlength=len(vs)) == dim
+        mat = vals[full[owner]].astype(np.float64).reshape(-1, dim)
         signs = (mat @ planes.T) > 0                      # (n, bands*p)
         keys = signs.reshape(len(mat), bands, planes_per_band) @ powers
-        return pd.Series(list(keys.astype(np.int64)))
+        offsets = np.r_[0, np.cumsum(full * bands)].astype(np.int32)
+        return pa.ListArray.from_arrays(offsets, keys.ravel(), mask=pa.array(~full))
 
     vd = F.transform(vec_col, lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(vd, F.lit(0.0), lambda a, x: a + x * x))

@@ -573,6 +573,24 @@ def test_embedding_near_dup_lsh_recall(spark):
         assert r["cosine"] >= 0.98
 
 
+def test_embedding_lsh_skips_null_vectors(spark):
+    """A NULL vector, or one holding a NULL element, gets NULL band keys and
+    forms no pair, as on the exact path; a vector of another length than
+    the probed one fails loudly."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.001, 0.0]), (3, None), (4, [0.0, 1.0, 0.0]),
+         (5, [1.0, None, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    exact = sorted(dedup.embedding_near_dup_pairs(df, threshold=0.95).collect())
+    lsh = sorted(dedup.embedding_near_dup_pairs_lsh(df, threshold=0.95).collect())
+    assert [tuple(r) for r in exact] == [(1, 2, 1.0)]
+    assert lsh == exact
+    short = df.union(spark.createDataFrame([(6, [1.0, 0.0])], df.schema))
+    with pytest.raises(Exception, match=r"embedding lengths \[2\] differ from the probed dim 3"):
+        dedup.embedding_near_dup_pairs_lsh(short, threshold=0.95).collect()
+
+
 # ---------------- similarity ----------------
 
 def test_brute_force_topk(emb):

@@ -118,7 +118,7 @@ def test_suite_build_sql_one_shuffle_all_sketches(spark, items):
     plan = suite._sc._jvm.PythonSQLUtils.explainString(
         suite._jdf.queryExecution(), "formatted") if False else \
         suite._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEval" not in plan and "MapInPandas" not in plan
+    assert "ArrowEval" not in plan and "MapInPandas" not in plan and "MapInArrow" not in plan
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan or "SortAggregate" in plan
 
 

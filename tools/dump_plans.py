@@ -4,9 +4,10 @@ the before/after plan diffs kept under plans/rNN/.
 Usage: python tools/dump_plans.py OUT_DIR {before,after} SF_DIR [builder ...]
 
 Writes OUT_DIR/{builder}_{before,after}.txt for every builder in BUILDERS
-(or the ones named), over SF_DIR/documents.parquet. The plans are those of
-the package in the checkout this script sits in, so for a "before" dump
-run a copy of it inside a checkout of the parent commit. Every builder is
+(or the ones named), over SF_DIR/documents.parquet (embeddings.parquet for
+the embedding builder). The plans are those of the package in the checkout
+this script sits in, so for a "before" dump run a copy of it inside a
+checkout of the parent commit. Every builder is
 planned in a fresh process (its own JVM), so the plan_ids of two checkouts
 line up, on local[4] with AQE off (the formatted plan is then the one that
 runs, not an AdaptiveSparkPlan placeholder). Expression ids and the
@@ -38,7 +39,7 @@ def _cached(df):
     return df
 
 
-def _sketch_partials(spark, docs):
+def _sketch_partials(spark, docs, sf_dir):
     from cardinality_estimation_evaluation_framework_spark.datagen import tokens as tk
     from cardinality_estimation_evaluation_framework_spark.operators import aggregate as agg
     from cardinality_estimation_evaluation_framework_spark.sketches.hll import HllKernel
@@ -47,7 +48,7 @@ def _sketch_partials(spark, docs):
     return agg.sketch_partials(tokens, HllKernel(p=12, seed=1), "tokens")
 
 
-def _minhash_signatures(spark, docs):
+def _minhash_signatures(spark, docs, sf_dir):
     from pyspark.sql import functions as F
 
     from cardinality_estimation_evaluation_framework_spark.operators import dedup
@@ -56,9 +57,57 @@ def _minhash_signatures(spark, docs):
         docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")))
 
 
+def _decontam_docs(docs):
+    """(docs, bench): string doc ids, and every 97th doc as the benchmark."""
+    from pyspark.sql import functions as F
+
+    ddocs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    return ddocs, ddocs.where(F.col("doc_id").cast("long") % 97 == 0)
+
+
+def _bloom_kernel():
+    from cardinality_estimation_evaluation_framework_spark.operators import decontam
+
+    return decontam.bloom_kernel(m=1 << 18, k=2, seed=1)
+
+
+def _bloom_build_partials(spark, docs, sf_dir):
+    """The stage-1 frame that build_benchmark_bloom hands to tree_merge."""
+    from unittest import mock
+
+    from cardinality_estimation_evaluation_framework_spark.operators import aggregate as agg
+    from cardinality_estimation_evaluation_framework_spark.operators import decontam
+
+    seen = []
+
+    def capture(partials, kernel, *args, **kwargs):
+        seen.append(partials)
+        return kernel.empty()
+
+    with mock.patch.object(agg, "tree_merge", capture):
+        decontam.build_benchmark_bloom(_decontam_docs(docs)[1], n=5, kernel=_bloom_kernel())
+    return seen[0]
+
+
+def _flag_contaminated_bloom(spark, docs, sf_dir):
+    from cardinality_estimation_evaluation_framework_spark.operators import decontam
+
+    ddocs, bench = _decontam_docs(docs)
+    kernel = _bloom_kernel()
+    state = decontam.build_benchmark_bloom(bench, n=5, kernel=kernel)
+    return decontam.flag_contaminated_bloom(ddocs, state, kernel, n=5)
+
+
+def _embedding_lsh(spark, docs, sf_dir):
+    from cardinality_estimation_evaluation_framework_spark.operators import dedup
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).limit(500)
+    return dedup.embedding_near_dup_pairs_lsh(emb, threshold=0.9)
+
+
 def _on_docs(module: str, name: str):
     """(header, plan function) for ``module.name(docs)`` at its defaults."""
-    return f"{name}(docs)", lambda spark, docs: getattr(
+    return f"{name}(docs)", lambda spark, docs, sf_dir: getattr(
         importlib.import_module(f"{PKG}.{module}"), name)(docs)
 
 
@@ -86,6 +135,20 @@ BUILDERS = {
     "minhash_signatures": (
         "minhash_signatures(cached(docs.select(doc_id cast string, text)))",
         _minhash_signatures,
+    ),
+    "bloom_build_partials": (
+        "the sketch_partials frame of build_benchmark_bloom(bench, n=5,"
+        " bloom_kernel(m=1 << 18, k=2, seed=1)), bench = every 97th doc",
+        _bloom_build_partials,
+    ),
+    "flag_contaminated_bloom": (
+        "flag_contaminated_bloom(docs, build_benchmark_bloom(bench, n=5, kernel),"
+        " kernel, n=5), kernel = bloom_kernel(m=1 << 18, k=2, seed=1)",
+        _flag_contaminated_bloom,
+    ),
+    "embedding_near_dup_pairs_lsh": (
+        "embedding_near_dup_pairs_lsh(embeddings.limit(500), threshold=0.9)",
+        _embedding_lsh,
     ),
     **{name: _on_docs(module, name) for module, name in _TOKENIZER_CONSUMERS},
 }
@@ -115,7 +178,7 @@ def dump_one(name: str, sf_dir: str) -> str:
     call, build = BUILDERS[name]
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        build(spark, docs).explain("formatted")
+        build(spark, docs, sf_dir).explain("formatted")
     spark.stop()
     return (
         f"# {call} over {os.path.basename(sf_dir)} documents.parquet, "

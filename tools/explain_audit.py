@@ -97,9 +97,9 @@ def main() -> None:
     partials = agg.sketch_partials(items, HllKernel(p=12, seed=1))
     # codegen spans appear as "* " node prefixes in formatted explain
     sections.append((
-        "sketch partial stage (scan → tokenize → explode → mapInPandas)",
+        "sketch partial stage (scan → tokenize → explode → mapInArrow)",
         plan_of(partials),
-        ["* Generate", "MapInPandas"],
+        ["* Generate", "MapInArrow"],
     ))
     # a small token-array input cached in more splits than cores is merged
     # to one task per core by a narrow Coalesce: still no Exchange between
@@ -111,12 +111,19 @@ def main() -> None:
     sections.append((
         "sketch partial stage over cached token arrays in 2 x cores splits",
         arr_plan,
-        ["Coalesce", "MapInPandas"],
+        ["Coalesce", "MapInArrow"],
     ))
     above_scan = tree_of(arr_plan).split("InMemoryRelation")[0]
     assert "Coalesce" in above_scan, "small input not merged to one task per core!"
     assert "Exchange" not in above_scan, "raw rows are shuffled before the partials!"
     cached.unpersist()
+    # a nullable array<bigint> crosses Arrow as it is: its NULL elements
+    # are validity bits read in Python, not a JVM-side filter lambda
+    ids = spark.range(1000).select(
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("ids"))
+    assert ids.schema["ids"].dataType.containsNull
+    ids_plan = plan_of(agg.sketch_partials(ids, HllKernel(p=12, seed=1), "ids"))
+    assert "filter(" not in ids_plan, "nullable bigint arrays are filtered in the JVM!"
 
     # 2. column pruning: tokenizer must read only (doc_id, text, source)
     narrow = tk.tokenize_hashed(docs).select("n_tok")
@@ -164,10 +171,10 @@ def main() -> None:
     sections.append((
         "minhash signatures (partials -> min-merge; grams never shuffle)",
         sig_plan,
-        ["MapInPandas"],
+        ["MapInArrow"],
     ))
-    # every Exchange must sit ABOVE the MapInPandas (partials), never below
-    map_pos = sig_plan.index("MapInPandas")
+    # every Exchange must sit ABOVE the MapInArrow (partials), never below
+    map_pos = sig_plan.index("MapInArrow")
     gram_side = sig_plan[map_pos:]
     assert "Exchange hashpartitioning(doc_id" not in gram_side.replace(
         "Exchange RoundRobinPartitioning", ""), "raw grams are being shuffled!"
@@ -207,7 +214,7 @@ def main() -> None:
         sql_plan,
         ["HashAggregate"],
     ))
-    assert "MapInPandas" not in sql_plan and "ArrowEval" not in sql_plan, (
+    assert not re.search("MapIn(Pandas|Arrow)|ArrowEval", sql_plan), (
         "Python operator leaked into the SQL sketch plan!")
 
     # 9. exact heavy hitters: TakeOrdered, never a single-partition window
@@ -277,7 +284,7 @@ def main() -> None:
     # 12. decontamination: the exact path must BROADCAST the benchmark
     # gram set (never shuffle the corpus-side grams for the join), and the
     # Bloom scale path must contain NO join at all — the probe rides the
-    # scan as a mapInPandas over a broadcast bitset.
+    # scan as a mapInArrow over a broadcast bitset.
     from cardinality_estimation_evaluation_framework_spark.operators import (
         decontam as decontam_ops,
     )
@@ -300,7 +307,7 @@ def main() -> None:
     sections.append((
         "decontamination Bloom probe (no join — broadcast bitset probed in-batch)",
         bloom_plan,
-        ["MapInPandas"],
+        ["MapInArrow"],
     ))
     assert "Join" not in tree_of(bloom_plan), (
         "Bloom decontam probe plan contains a join!")
@@ -314,7 +321,7 @@ def main() -> None:
     sections.append((
         "decontamination Bloom probe, gram-less-inclusive (join-free, no gram distinct)",
         bloom_full_plan,
-        ["MapInPandas"],
+        ["MapInArrow"],
     ))
     n_joins = tree_of(bloom_full_plan).count("Join")
     assert n_joins == 0, (
