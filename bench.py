@@ -50,7 +50,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SYNTH_DOCS = int(os.environ.get("BENCH_SYNTH_DOCS", "300000"))
 TOKENS_PER_DOC = 100
-SYNTH_PARTS = 64  # fixed input layout so parallelism levels see identical splits
+SYNTH_PARTS = 64  # input splits; sketch_partials merges a small input to one task per core
 
 
 def flagship_kernel() -> SuiteKernel:
@@ -130,10 +130,10 @@ def main() -> None:
     hll_est = HllKernel(p=14, seed=42).estimate(suite.child(state, "hll"))[0]
 
     # pure-Catalyst single-sketch HLL build (zero Python) — the scan-speed
-    # path (operators/sql_sketch.py). Measured tradeoff: single-sketch SQL
-    # builds beat the Arrow kernel (no Python worker traffic); MULTI-sketch
-    # suites favor the Arrow kernel because the SQL union-aggregation fans
-    # every token into (1 + 1 + depth) rows (see BENCH/BASELINE.md).
+    # path (operators/sql_sketch.py). A single-sketch SQL build beats the
+    # Arrow kernel (no Python worker traffic); the multi-sketch suite runs
+    # on the Arrow kernel, which was measured faster than a SQL
+    # union-aggregation that fans every token into (1 + 1 + depth) rows.
     synth_items = synth_token_items(spark, SYNTH_DOCS, SYNTH_PARTS)
     sec1, _ = timed(lambda: sql_sketch.hll_registers_sql(
         synth_items, p=14, seed=42).count())

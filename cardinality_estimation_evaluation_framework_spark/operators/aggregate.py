@@ -87,6 +87,8 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     State,
 )
 
+_NAN = float("nan")  # the one NaN group key object (see sketch_partials.groups)
+
 
 def spread_partitions(
     df: DataFrame, input_partitions: int | None = None
@@ -273,8 +275,10 @@ def sketch_partials(
         keyvals = [batch.column(k) for k in key_cols]
         for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(order)]):
             key = tuple(kv[int(rows[s])].as_py() for kv in keyvals)
-            # a NaN key folds into the NULL key, as it did on the pandas path
-            yield tuple(v if v == v else None for v in key), vals[order[s:e]]
+            # NaN is a key of its own, apart from NULL, as in a SQL GROUP BY;
+            # one NaN object lets a later batch's NaN find the same state
+            # (NaN != NaN, so tuple and dict lookups match it by identity)
+            yield tuple(_NAN if v != v else v for v in key), vals[order[s:e]]
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         states: dict[tuple, list] = {}
@@ -321,13 +325,15 @@ def grouped_sketch_partials(
 
 def _merge_fn(kernel: SketchKernel, key_cols: list[str]):
     """The one merge: merge one key's packed states, sum their ``rows`` and
-    keep the key columns."""
+    keep the key columns as Arrow values, so a NaN key stays NaN and a NULL
+    key stays NULL."""
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.iloc[[0]][key_cols].copy()
-        out["sketch"] = [kernel.merge_packed(list(pdf["sketch"]))]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return out
+    def merge(table: pa.Table) -> pa.Table:
+        out = [table.column(k).slice(0, 1) for k in key_cols]
+        out.append(pa.array(
+            [kernel.merge_packed(table.column("sketch").to_pylist())], pa.binary()))
+        out.append(pa.array([pc.sum(table.column("rows")).as_py()], pa.int64()))
+        return pa.Table.from_arrays(out, names=[*key_cols, "sketch", "rows"])
 
     return merge
 
@@ -354,7 +360,7 @@ def tree_merge(
         cur = (
             cur.withColumn("gid", F.pmod(F.col("gid"), F.lit(width)))
             .groupBy("gid")
-            .applyInPandas(_merge_fn(kernel, ["gid"]), schema=partials.schema)
+            .applyInArrow(_merge_fn(kernel, ["gid"]), schema=partials.schema)
         )
         n = width
     # Arrow transfer for the final fetch: packed states are binary blobs
@@ -400,7 +406,7 @@ def grouped_sketch(
 ) -> DataFrame:
     """DataFrame of (key_cols..., sketch, rows), one merged state per key."""
     partials = sketch_partials(df, kernel, col, key_cols=key_cols)
-    return partials.groupBy(*key_cols).applyInPandas(
+    return partials.groupBy(*key_cols).applyInArrow(
         _merge_fn(kernel, list(key_cols)), schema=partials.schema
     )
 
@@ -415,17 +421,18 @@ def grouped_estimate(
     fields = [sketches_df.schema[k] for k in key_cols]
     schema = StructType(fields + [StructField(value_name, DoubleType())])
 
-    def est(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def est(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             vals = [
-                float(kernel.estimate(kernel.unpack(bytes(raw)))[0])
-                for raw in pdf["sketch"]
+                float(kernel.estimate(kernel.unpack(raw))[0])
+                for raw in batch.column("sketch").to_pylist()
             ]
-            out = pdf[key_cols].copy()
-            out[value_name] = vals
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [*(batch.column(k) for k in key_cols), pa.array(vals, pa.float64())],
+                names=schema.names,
+            )
 
-    return sketches_df.mapInPandas(est, schema=schema)
+    return sketches_df.mapInArrow(est, schema=schema)
 
 
 def grouped_quantiles(
@@ -436,7 +443,7 @@ def grouped_quantiles(
     value_name: str = "value",
 ) -> DataFrame:
     """Per-key quantile answers from grouped KLL/t-digest states: one row
-    per (key, q). The estimate step stays distributed (mapInPandas over
+    per (key, q). The estimate step stays distributed (mapInArrow over
     the per-key sketch rows) — the training-pipeline 'per-source length
     distribution' query at any key cardinality."""
     fields = [sketches_df.schema[k] for k in key_cols]
@@ -446,16 +453,16 @@ def grouped_quantiles(
     )
     qs_arr = np.asarray([float(q) for q in qs], dtype=np.float64)
 
-    def est(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for i, raw in enumerate(pdf["sketch"]):
-                vals = kernel.quantile(kernel.unpack(bytes(raw)), qs_arr)
-                out = pdf.iloc[[i] * len(qs_arr)][key_cols].copy()
-                out["q"] = qs_arr
-                out[value_name] = np.asarray(vals, dtype=np.float64)
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def est(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            vals = [kernel.quantile(kernel.unpack(raw), qs_arr)
+                    for raw in batch.column("sketch").to_pylist()]
+            rows = pa.array(np.repeat(np.arange(batch.num_rows), len(qs_arr)))
+            yield pa.RecordBatch.from_arrays(
+                [*(batch.column(k).take(rows) for k in key_cols),
+                 pa.array(np.tile(qs_arr, batch.num_rows)),
+                 pa.array(np.asarray(vals, dtype=np.float64).reshape(-1))],
+                names=schema.names,
+            )
 
-    return sketches_df.mapInPandas(est, schema=schema)
+    return sketches_df.mapInArrow(est, schema=schema)

@@ -1,48 +1,38 @@
-"""Pure-Catalyst (zero-Python) sketch builds — the scan-speed path.
+"""Pure-Catalyst (zero-Python) HLL++ builds — the scan-speed path.
 
 The Arrow JVM->Python transfer is the throughput ceiling of the pandas
 kernels (~6.5M rows/s machine-wide in this sandbox regardless of cores).
-These builders express the ENTIRE sketch update in Spark SQL built-ins
+These builders express the ENTIRE HLL++ update in Spark SQL built-ins
 (xxhash64 + bit ops + groupBy with map-side partial aggregation), so the
 hot path stays inside whole-stage codegen and scales with the scan:
+bucket = top-p bits of xxhash64, rho = leading zeros of the low window + 1,
+``groupBy(bucket).max(rho)`` — partial max per partition, so the shuffle
+carries at most m rows per partition.
 
-- HLL++: bucket = top-p bits of xxhash64, rho = leading zeros of the low
-  window + 1; ``groupBy(bucket).max(rho)`` — partial max per partition,
-  shuffle carries at most m rows per partition.
-- count-min: depth seeded hashes -> ``groupBy(r, bucket).count()`` (counts
-  are exact aggregates, so the SQL build is exactly a count-min table).
-- exponential ADBF: the register distribution is a truncated geometric in
-  disguise (probs_i ∝ q^(i+1) with q = exp(-a/(m+1))), so the inverse CDF
-  has the closed form i = ceil(log1p(-u*(1-q^m)) / ln q) - 1 — one float
-  expression instead of a searchsorted kernel.
+``hll_estimate_sql`` collects the registers and applies
+``hll.register_estimate``, the kernels' own formula;
+``hll_estimates_by_key_sql`` spells the same formula as a groupBy
+aggregate so per-key registers never reach the driver. Seeding:
+``xxhash64(lit(seed), col)`` gives an independent hash family per seed
+(xxhash64 is Spark's native 64-bit hash; estimator accuracy bounds are
+distribution-level, so the Python kernels' splitmix64 and this path are
+interchangeable statistically — pinned by tests against exact counts and
+against each other's estimates).
 
-Each builder returns a register-level DataFrame AND a ``*_state`` twin that
-collects it into the matching kernel State, so estimates reuse the tested
-estimator formulas. Seeding: ``xxhash64(lit(seed), col)`` gives an
-independent hash family per seed (xxhash64 is Spark's native 64-bit hash;
-estimator accuracy bounds are distribution-level, so the Python kernels'
-splitmix64 and this path are interchangeable statistically — pinned by
-tests against exact counts and against each other's estimates).
-
-Semantics note (rho): Java ``log2`` on doubles is exact for w < 2^53, i.e.
-window <= 53 bits (p >= 11). For smaller p the bit length falls back to
-``length(bin(w))`` (exact at any width, slightly slower).
+Semantics note (rho): the bit length of the window is
+``length(bin(w))``, exact at any width; see ``_bit_length`` for why a
+``log2`` path is not.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from cardinality_estimation_evaluation_framework_spark.sketches.base import State
-from cardinality_estimation_evaluation_framework_spark.sketches.countmin import (
-    CountMinKernel,
-)
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import (
     THRESHOLD,
     _alpha,
+    register_estimate,
 )
 
 
@@ -51,7 +41,7 @@ def _seeded_hash(col, seed: int):
     return F.xxhash64(F.lit(seed), col)
 
 
-def _bit_length(col, max_bits: int):
+def _bit_length(col):
     """Exact bit length of a non-negative long column.
 
     ``length(bin(w))`` (Long.toBinaryString) is exact at any width. A
@@ -59,7 +49,6 @@ def _bit_length(col, max_bits: int):
     below 2^k once k >= 48 (verified numerically: floor(log2(2^48-1)) = 48),
     which would emit rho = 0 for ~1e-14 of hashes — invisible in tests,
     plausible at 10^11 tokens. Exactness beats the ~string-alloc cost."""
-    _ = max_bits
     return F.length(F.bin(col))
 
 
@@ -71,22 +60,10 @@ def _hll_bucket_rho(h, p: int):
     w = h.bitwiseAND(F.lit((1 << window) - 1))
     rho = (
         F.when(w == 0, F.lit(window + 1))
-        .otherwise(F.lit(window) - _bit_length(w, window) + 1)
+        .otherwise(F.lit(window) - _bit_length(w) + 1)
         .cast("int")
     )
     return bucket, rho
-
-
-def _adbf_bucket(h, m: int, decay_rate: float):
-    """Exp-ADBF register index column from a 64-bit hash column (closed-form
-    truncated-geometric inverse CDF) — single shared definition."""
-    a = decay_rate
-    q = math.exp(-a / (m + 1))
-    u = (h.cast("double") / F.lit(float(2**64))) + F.when(
-        h < 0, F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    idx = F.ceil(F.log1p(-u * F.lit(1.0 - q**m)) / F.lit(math.log(q))) - 1
-    return F.greatest(F.lit(0), F.least(F.lit(m - 1), idx)).cast("int")
 
 
 def hll_registers_sql(items: DataFrame, p: int = 14, seed: int = 0,
@@ -101,193 +78,12 @@ def hll_registers_sql(items: DataFrame, p: int = 14, seed: int = 0,
 
 def hll_estimate_sql(items: DataFrame, p: int = 14, seed: int = 0,
                      col: str = "item") -> float:
-    """Distinct-count estimate from the SQL register build (HLL++ formula
-    with linear-counting fallback, same as HllKernel.estimate)."""
-    m = 1 << p
-    regs = np.zeros(m, dtype=np.int8)
+    """Distinct-count estimate from the SQL register build, by the
+    kernels' formula (``hll.register_estimate``)."""
+    regs = np.zeros(1 << p, dtype=np.int8)
     for r in hll_registers_sql(items, p, seed, col).collect():
         regs[r["bucket"]] = r["rho"]
-    raw = _alpha(m) * m**2 / float(np.sum(np.exp2(-regs.astype(np.float64))))
-    v = int(np.count_nonzero(regs == 0))
-    if v != 0:
-        lc = m * math.log(m / v)
-        if lc <= THRESHOLD[p]:
-            return float(lc)
-    return float(raw)
-
-
-def countmin_table_sql(items: DataFrame, width: int = 2048, depth: int = 5,
-                       seed: int = 0, col: str = "item") -> DataFrame:
-    """(r int, bucket int, cnt long) count-min table, JVM-side.
-
-    One explode of depth hash rows per item, then a counted groupBy —
-    map-side combine keeps the shuffle at <= depth*width rows/partition.
-    """
-    rows = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(r).alias("r"),
-                F.pmod(_seeded_hash(F.col(col), seed * 31 + r), F.lit(width))
-                .cast("int")
-                .alias("bucket"),
-            )
-            for r in range(depth)
-        ])
-    )
-    return (
-        items.select(rows.alias("rb"))
-        .select("rb.r", "rb.bucket")
-        .groupBy("r", "bucket")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def countmin_state_sql(items: DataFrame, width: int = 2048, depth: int = 5,
-                       seed: int = 0, col: str = "item") -> State:
-    """Collect the SQL table into a CountMinKernel-shaped State.
-
-    n is recovered from row 0's column sums (every item increments exactly
-    one bucket per row), so no extra scan is paid. IMPORTANT: this table is
-    built with Spark's xxhash64 family, which the numpy kernel cannot
-    reproduce — point queries must go through :func:`countmin_query_sql`
-    (same SQL hash), NEVER through CountMinKernel.query (splitmix64 —
-    would read unrelated buckets and break the est >= true guarantee)."""
-    kernel = CountMinKernel(width=width, depth=depth, seed=seed)
-    state = kernel.empty()
-    for r in countmin_table_sql(items, width, depth, seed, col).collect():
-        state["table"][r["r"], r["bucket"]] = r["cnt"]
-    state["n"][0] = int(state["table"][0].sum())
-    return state
-
-
-def countmin_query_sql(spark, state: State, values, width: int = 2048,
-                       depth: int = 5, seed: int = 0) -> np.ndarray:
-    """Point queries against a countmin_state_sql table: bucket indices for
-    the queried values are computed with the SAME xxhash64 SQL expressions
-    that built the table, then the usual min-over-rows upper bound."""
-    vals_df = spark.createDataFrame(
-        [(int(v),) for v in values], "item long")
-    bucket_cols = [
-        F.pmod(_seeded_hash(F.col("item"), seed * 31 + r), F.lit(width))
-        .cast("int").alias(f"b{r}")
-        for r in range(depth)
-    ]
-    rows = vals_df.select("item", *bucket_cols).collect()
-    by_item = {r["item"]: [r[f"b{i}"] for i in range(depth)] for r in rows}
-    out = np.empty(len(values), dtype=np.int64)
-    for i, v in enumerate(values):
-        buckets = by_item[int(v)]
-        out[i] = min(int(state["table"][r, b]) for r, b in enumerate(buckets))
-    return out
-
-
-def exp_adbf_registers_sql(items: DataFrame, m: int = 65536,
-                           decay_rate: float = 10.0, seed: int = 0,
-                           col: str = "item") -> DataFrame:
-    """(bucket int) active-register set of an exponential ADBF, JVM-side.
-
-    probs_i ∝ exp(-a(i+1)/(m+1)) = q^(i+1), q = exp(-a/(m+1)) — a truncated
-    geometric, so bounds_i = (1-q^(i+1))/(1-q^m) and the searchsorted
-    becomes the closed form i = ceil(ln(1-u(1-q^m)) / ln q) - 1 with
-    u = hash/2^64 in [0,1). Register-identical to the numpy inverse-CDF up
-    to float boundary ulps (distribution-level identical; estimator bounds
-    unaffected), pinned statistically in tests.
-    """
-    h = _seeded_hash(F.col(col), seed)
-    bucket = _adbf_bucket(h, m, decay_rate)
-    return items.select(bucket.alias("bucket")).distinct()
-
-
-def exp_adbf_estimate_sql(items: DataFrame, m: int = 65536,
-                          decay_rate: float = 10.0, seed: int = 0,
-                          col: str = "item") -> float:
-    """First-moment 'exp' estimate from the SQL register build (reuses the
-    tested expi-based inversion from sketches.bloom)."""
-    from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
-        BloomKernel,
-        first_moment_estimate,
-    )
-
-    kernel = BloomKernel(dist_kind="exponential", m=m, seed=seed,
-                         decay_rate=decay_rate)
-    active = [r["bucket"] for r in
-              exp_adbf_registers_sql(items, m, decay_rate, seed, col).collect()]
-    state = kernel.empty()
-    state["registers"][np.asarray(active, dtype=np.int64)] = 1.0
-    return first_moment_estimate(kernel, state, method="exp")
-
-
-def suite_build_sql(items: DataFrame, p: int = 14, cm_width: int = 4096,
-                    cm_depth: int = 4, adbf_m: int = 65536,
-                    adbf_decay: float = 10.0, seed: int = 0,
-                    col: str = "item") -> DataFrame:
-    """HLL + count-min + exp-ADBF in ONE aggregation: every item fans out
-    to (sketch, key) rows and a single counted/max groupBy builds all three
-    register tables — one scan, one (map-side combined) shuffle whose width
-    is bounded by total register count per partition, zero Python.
-
-    Output: (sketch string, r int, bucket int, val long) where val is rho
-    for 'hll', the count for 'cm', and 1 for 'adbf'.
-    """
-    h = _seeded_hash(F.col(col), seed)
-    hll_bucket, rho = _hll_bucket_rho(h, p)
-    adbf_bucket = _adbf_bucket(h, adbf_m, adbf_decay)
-
-    fan = F.explode(
-        F.array(
-            F.struct(
-                F.lit("hll").alias("sketch"), F.lit(0).alias("r"),
-                hll_bucket.alias("bucket"),
-                rho.cast("long").alias("v"),
-            ),
-            F.struct(
-                F.lit("adbf").alias("sketch"), F.lit(0).alias("r"),
-                adbf_bucket.alias("bucket"), F.lit(1).cast("long").alias("v"),
-            ),
-            *[
-                F.struct(
-                    F.lit("cm").alias("sketch"), F.lit(r).alias("r"),
-                    F.pmod(_seeded_hash(F.col(col), seed * 31 + r), F.lit(cm_width))
-                    .cast("int").alias("bucket"),
-                    F.lit(1).cast("long").alias("v"),
-                )
-                for r in range(cm_depth)
-            ],
-        )
-    )
-    fanned = items.select(fan.alias("f")).select("f.sketch", "f.r", "f.bucket", "f.v")
-    return fanned.groupBy("sketch", "r", "bucket").agg(
-        # max == rho-merge for hll; sum == count for cm; max(1)=1 for adbf
-        F.when(F.col("sketch") == "cm", F.sum("v"))
-        .otherwise(F.max("v"))
-        .alias("val")
-    )
-
-
-def suite_states_from_sql(suite_rows: DataFrame, p: int = 14,
-                          cm_width: int = 4096, cm_depth: int = 4,
-                          adbf_m: int = 65536, adbf_decay: float = 10.0,
-                          seed: int = 0) -> dict[str, State]:
-    """Collect suite_build_sql output into kernel States (registers ->
-    estimate-ready), completing the pure-SQL suite path: the returned dict
-    has 'hll' (int8 registers), 'cm' (CountMin table + n inferred from the
-    counts), 'adbf' (0/1 registers)."""
-    hll_regs = np.zeros(1 << p, dtype=np.int8)
-    cm_table = np.zeros((cm_depth, cm_width), dtype=np.int64)
-    adbf_regs = np.zeros(adbf_m, dtype=np.float64)
-    for r in suite_rows.collect():
-        if r["sketch"] == "hll":
-            hll_regs[r["bucket"]] = r["val"]
-        elif r["sketch"] == "cm":
-            cm_table[r["r"], r["bucket"]] = r["val"]
-        else:
-            adbf_regs[r["bucket"]] = 1.0
-    n = int(cm_table[0].sum()) if cm_depth else 0
-    return {
-        "hll": {"registers": hll_regs},
-        "cm": {"table": cm_table, "n": np.array([n], dtype=np.int64)},
-        "adbf": {"registers": adbf_regs},
-    }
+    return register_estimate(regs, p)
 
 
 def hll_registers_by_key_sql(items: DataFrame, keys: list[str], p: int = 14,
@@ -331,38 +127,3 @@ def hll_estimates_by_key_sql(items: DataFrame, keys: list[str], p: int = 14,
         (v > 0) & (lc <= F.lit(float(THRESHOLD[p]))), lc
     ).otherwise(raw)
     return regs.groupBy(*keys).agg(est.alias("estimate"))
-
-
-def countmin_table_by_key_sql(items: DataFrame, keys: list[str],
-                              width: int = 2048, depth: int = 5,
-                              seed: int = 0, col: str = "item") -> DataFrame:
-    """(keys..., r, bucket, cnt) — per-key count-min tables, JVM-side; the
-    grouped twin of countmin_table_sql (map-side combine bounds the shuffle
-    at keys x depth x width rows per partition)."""
-    rows = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(r).alias("r"),
-                F.pmod(_seeded_hash(F.col(col), seed * 31 + r), F.lit(width))
-                .cast("int")
-                .alias("bucket"),
-            )
-            for r in range(depth)
-        ])
-    )
-    return (
-        items.select(*keys, rows.alias("rb"))
-        .select(*keys, "rb.r", "rb.bucket")
-        .groupBy(*keys, "r", "bucket")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def exp_adbf_registers_by_key_sql(items: DataFrame, keys: list[str],
-                                  m: int = 65536, decay_rate: float = 10.0,
-                                  seed: int = 0, col: str = "item") -> DataFrame:
-    """(keys..., bucket) — per-key exp-ADBF active-register sets, JVM-side;
-    grouped twin of exp_adbf_registers_sql."""
-    h = _seeded_hash(F.col(col), seed)
-    bucket = _adbf_bucket(h, m, decay_rate)
-    return items.select(*keys, bucket.alias("bucket")).distinct()

@@ -37,8 +37,7 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     State,
 )
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import (
-    THRESHOLD,
-    _alpha,
+    register_estimate,
 )
 
 
@@ -204,14 +203,7 @@ class FllKernel(SketchKernel):
                 capped = np.minimum(counts, self.max_freq)
                 return [float((capped >= k).sum())
                         for k in range(1, self.max_freq + 1)]
-        regs = state["rho"].astype(np.float64)
-        raw = _alpha(self.m) * self.m**2 / np.sum(np.exp2(-regs))
-        v = int(np.count_nonzero(regs == 0))
-        cardinality = raw
-        if v != 0:
-            lc = self.m * np.log(self.m / v)
-            if lc <= THRESHOLD[self.p]:
-                cardinality = lc
+        cardinality = register_estimate(state["rho"], self.p)
         freqs = np.minimum(state["freq"], self.max_freq)
         frequencies = np.bincount(
             freqs[freqs > 0].astype(np.int64), minlength=self.max_freq + 1

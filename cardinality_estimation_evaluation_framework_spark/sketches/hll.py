@@ -53,6 +53,21 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1 + 1.079 / m)
 
 
+def register_estimate(registers: np.ndarray, p: int) -> float:
+    """HLL++ distinct-count estimate from ``2^p`` registers (ref:
+    hyper_log_log.py:177-215): linear counting ``m*ln(m/V)`` when V > 0
+    registers are zero and it is at or below the threshold for p (``5m/2``
+    for a p outside the HLL++ table), else alpha_m * m^2 / sum(2^-M)."""
+    m = 1 << p
+    regs = registers.astype(np.float64)
+    v = int(np.count_nonzero(regs == 0))
+    if v != 0:
+        lc = m * np.log(m / v)
+        if lc <= THRESHOLD.get(p, 5 * m // 2):
+            return float(lc)
+    return float(_alpha(m) * m**2 / np.sum(np.exp2(-regs)))
+
+
 class HllKernel(SketchKernel):
     """HLL++ build/merge/estimate kernel.
 
@@ -156,14 +171,7 @@ class HllKernel(SketchKernel):
         if ids is not None:
             # exact below threshold (ref: hyper_log_log.py:194-195)
             return [float(len(ids))]
-        regs = state["registers"].astype(np.float64)
-        raw = _alpha(self.m) * self.m**2 / np.sum(np.exp2(-regs))
-        v = int(np.count_nonzero(regs == 0))
-        if v != 0:
-            lc = self.m * np.log(self.m / v)
-            if lc <= THRESHOLD[self.p]:
-                return [float(lc)]
-        return [float(raw)]
+        return [register_estimate(state["registers"], self.p)]
 
     def std_error(self) -> float:
         """Theoretical relative std error 1.04/sqrt(m) (ref: hyper_log_log.py:37-38)."""
@@ -210,14 +218,7 @@ class PortableHllKernel(SketchKernel):
         return {"registers": np.maximum(a["registers"], b["registers"])}
 
     def estimate(self, state: State) -> list[float]:
-        regs = state["registers"].astype(np.float64)
-        raw = _alpha(self.m) * self.m**2 / np.sum(np.exp2(-regs))
-        v = int(np.count_nonzero(regs == 0))
-        if v != 0:
-            lc = self.m * np.log(self.m / v)
-            if lc <= THRESHOLD.get(self.p, 5 * self.m // 2):
-                return [float(lc)]
-        return [float(raw)]
+        return [register_estimate(state["registers"], self.p)]
 
     def register_sql(self, tid_col: str = "tid") -> str:
         """ANSI-SQL reproduction of the register table (Spark & DuckDB):

@@ -82,6 +82,37 @@ def test_grouped_sketch_null_key(spark):
     assert (got["registers"] == local["registers"]).all()
 
 
+def test_nan_key_is_its_own_group(spark):
+    # a NaN key groups apart from the NULL key, as groupBy().count() does,
+    # through stage 1, the merge and the estimate
+    from cardinality_estimation_evaluation_framework_spark.sketches.exact import (
+        ExactMultiSetKernel,
+    )
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(nan, 1), (None, 2), (1.0, 3), (nan, 4)], "k double, v long")
+    k = ExactMultiSetKernel()
+    est = agg.grouped_estimate(agg.grouped_sketch(df, k, ["k"], "v"), k, ["k"])
+
+    def by_key(rows, col):
+        return {("nan" if r["k"] != r["k"] else r["k"]): r[col] for r in rows}
+
+    expected = {"nan": 2, None: 1, 1.0: 1}
+    assert by_key(df.groupBy("k").count().collect(), "count") == expected
+    assert by_key(est.collect(), "estimate") == expected
+    # one input partition, one row per Arrow batch: both NaN rows still
+    # land in one stage-1 state
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch_rows = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        partials = agg.sketch_partials(df, k, "v", input_partitions=1, key_cols=["k"])
+        assert by_key(partials.collect(), "rows") == expected
+    finally:
+        spark.conf.set(conf, batch_rows)
+
+
 def test_empty_input(spark):
     df = spark.range(0).select(F.col("id").alias("item"))
     k = HllKernel(p=10, seed=0)

@@ -19,7 +19,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "cardinality_estimation_evaluation_framework_spark"
 
-_FLOOR = "kept while tier-1 tests exercise it (ROADMAP item 4)"
+_FLOOR = "kept while tier-1 tests exercise it (ROADMAP item 6)"
 
 #: modules no root imports, kept on purpose
 KEPT_MODULES = {
@@ -51,13 +51,6 @@ KEPT_DEFINITIONS = {
     "hashing.farmhash_or_none": "bit-exact farmhash parity when installed",
     "stratified.build_stratified": _FLOOR,
     "text.winnow_fp_array": _FLOOR + "; only the streaming module calls it",
-    "sql_sketch.countmin_state_sql": _FLOOR,
-    "sql_sketch.countmin_query_sql": _FLOOR,
-    "sql_sketch.countmin_table_by_key_sql": _FLOOR,
-    "sql_sketch.exp_adbf_estimate_sql": _FLOOR,
-    "sql_sketch.exp_adbf_registers_by_key_sql": _FLOOR,
-    "sql_sketch.suite_build_sql": _FLOOR,
-    "sql_sketch.suite_states_from_sql": _FLOOR,
     "liquid_legions.Sampler.sample_diff": "mirrors the reference (ref :537-557)",
 }
 
@@ -174,3 +167,20 @@ def test_tokenizer_regex_is_written_once():
     copies = sorted(str(p.relative_to(ROOT)) for p in sources
                     if p != home and "[^a-z0-9]+" in p.read_text())
     assert copies == []
+
+
+def test_hll_estimate_is_written_once():
+    """One HLL++ register estimate: alpha_m * m^2 / sum(2^-M) over numpy
+    registers is spelled only in ``hll.register_estimate``, which every HLL
+    kernel and ``sql_sketch.hll_estimate_sql`` call. The per-key SQL
+    aggregate in ``sql_sketch.hll_estimates_by_key_sql`` is the one other
+    spelling; it uses ``F.pow``, so it does not match here."""
+    spellings = []
+    for p in sorted((ROOT / PKG).rglob("*.py")):
+        src = p.read_text()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                body = ast.get_source_segment(src, node)
+                if "_alpha(" in body and "np.exp2(-" in body:
+                    spellings.append(f"{p.relative_to(ROOT / PKG)}:{node.name}")
+    assert spellings == ["sketches/hll.py:register_estimate"]
