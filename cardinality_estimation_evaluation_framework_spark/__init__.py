@@ -16,4 +16,10 @@ of the form ``ref: file.py:line`` in docstrings point at the behavior being
 matched, per SURVEY.md.
 """
 
+from cardinality_estimation_evaluation_framework_spark.worker_zipimport import (
+    lazy_zip_directories,
+)
+
 __version__ = "0.1.0"
+
+lazy_zip_directories()

@@ -277,8 +277,10 @@ def sketch_partials(
             key = tuple(kv[int(rows[s])].as_py() for kv in keyvals)
             # NaN is a key of its own, apart from NULL, as in a SQL GROUP BY;
             # one NaN object lets a later batch's NaN find the same state
-            # (NaN != NaN, so tuple and dict lookups match it by identity)
-            yield tuple(_NAN if v != v else v for v in key), vals[order[s:e]]
+            # (NaN != NaN, so tuple and dict lookups match it by identity).
+            # -0.0 and 0.0 are one key, labelled 0.0 as groupBy labels it
+            yield tuple(_NAN if v != v else v + 0.0 if isinstance(v, float) else v
+                        for v in key), vals[order[s:e]]
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         states: dict[tuple, list] = {}

@@ -9,6 +9,7 @@ single ufunc (.at) call per batch — never per-row Python.
 
 from __future__ import annotations
 
+import functools
 from typing import Any
 
 import numpy as np
@@ -50,6 +51,11 @@ class _BoundedDist:
         self._bounds = np.cumsum(self._probs)
         self._bounds /= self._bounds[-1]
         self.m = len(probs)
+
+    def __reduce__(self):
+        # rebuilt from its parameters: a pickled kernel (a Spark UDF's
+        # closure) carries a few numbers, not 2 x m float64
+        return functools.partial(make_distribution, self.kind, **self.params()), ()
 
     def register_probs(self) -> np.ndarray:
         return self._probs

@@ -1,3 +1,5 @@
+import math
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -111,6 +113,26 @@ def test_nan_key_is_its_own_group(spark):
         assert by_key(partials.collect(), "rows") == expected
     finally:
         spark.conf.set(conf, batch_rows)
+
+
+def test_zero_key_is_labelled_positive_zero(spark):
+    # -0.0 and 0.0 are one group labelled 0.0, as groupBy labels it, in
+    # every stage-1 partial and so in the merge, whichever spelling a
+    # partition sees first
+    from cardinality_estimation_evaluation_framework_spark.sketches.exact import (
+        ExactMultiSetKernel,
+    )
+
+    df = spark.createDataFrame(
+        [(-0.0, 1), (0.0, 2), (0.0, 3), (-0.0, 4)], "k double, v long").coalesce(1)
+    k = ExactMultiSetKernel()
+    for parts in (1, 2):
+        partials = agg.sketch_partials(df, k, "v", input_partitions=parts, key_cols=["k"])
+        merged = partials.groupBy("k").applyInArrow(
+            agg._merge_fn(k, ["k"]), schema=partials.schema)
+        est = agg.grouped_estimate(merged, k, ["k"]).collect()
+        assert [(r["k"], r["estimate"]) for r in est] == [(0.0, 4)]
+        assert math.copysign(1.0, est[0]["k"]) == 1.0
 
 
 def test_empty_input(spark):

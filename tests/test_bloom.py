@@ -1,9 +1,11 @@
 import math
+import pickle
 
 import numpy as np
 import pytest
 
 from cardinality_estimation_evaluation_framework_spark.functions.special import expi, invert_monotonic
+from cardinality_estimation_evaluation_framework_spark.sketches.any_sketch import make_distribution
 from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
     BloomKernel,
     classic_union_estimate,
@@ -82,3 +84,19 @@ def test_estimate_nan_when_uniform_full():
     k = BloomKernel(dist_kind="uniform", m=16, seed=0)
     st = k.update(k.empty(), np.arange(10_000, dtype=np.int64))
     assert math.isnan(first_moment_estimate(k, st, method="uniform"))
+
+
+@pytest.mark.parametrize("kind, params", [
+    ("geometric", {"m": 1024, "probability": 0.0015}),
+    ("log", {"m": 4096}),
+    ("exponential", {"m": 65536, "decay_rate": 10.0}),
+])
+def test_distribution_pickles_by_parameters(kind, params):
+    # a pickled distribution is rebuilt from its parameters, bit-identical
+    dist = make_distribution(kind, **params)
+    blob = pickle.dumps(dist)
+    back = pickle.loads(blob)
+    assert type(back) is type(dist) and back.params() == dist.params()
+    assert back._probs.tobytes() == dist._probs.tobytes()
+    assert back._bounds.tobytes() == dist._bounds.tobytes()
+    assert len(blob) < 1024

@@ -1,5 +1,6 @@
 import numpy as np
 import pytest
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from cardinality_estimation_evaluation_framework_spark.operators import aggregate as agg
@@ -52,6 +53,18 @@ def test_suite_pack_roundtrip_and_spark(spark):
         assert (np.asarray(st[key]) == np.asarray(st2[key])).all()
     hll_est = suite.kernels["hll"].estimate(suite.child(st, "hll"))[0]
     assert abs(hll_est - 30_000) / 30_000 < 0.05
+
+
+def test_suite_kernel_pickles_small():
+    # a Spark UDF ships its kernel pickled; over 1 MiB PySpark turns the
+    # command into a broadcast. The exponential ADBF's 2 x m float64 tables
+    # are rebuilt on unpickling, so the suite stays small
+    suite = SuiteKernel({
+        "hll": HllKernel(p=14, seed=42),
+        "cm": CountMinKernel(width=4096, depth=4, seed=1),
+        "bloom": BloomKernel(dist_kind="exponential", m=65536, seed=2, decay_rate=10.0),
+    })
+    assert len(cloudpickle.dumps(suite)) < 64 * 1024
 
 
 def test_suite_rejects_empty_and_namespaced_children():
