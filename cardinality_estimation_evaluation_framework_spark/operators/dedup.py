@@ -5,8 +5,8 @@ Scale design (100 TB posture):
 - exact dedup: hash-groupBy on a fingerprint — one shuffle of (hash, id).
 - n-gram Jaccard: the EXACT pairwise form (gram self-join) is the oracle /
   small-scale path; the production path is MinHash+LSH which turns the
-  quadratic join into a band-bucket equi-join (shuffle keyed on
-  (band, bucket-signature)) followed by exact verification of candidates.
+  quadratic join into one shuffle keyed on (band, bucket-signature), after
+  which each bucket pairs and verifies its own members.
 - signature builds shuffle ZERO raw grams/tokens: each Arrow batch emits
   per-doc partial signatures/accumulators (O(KB)) that a groupBy merges
   (min for minhash, sum for simhash bit counts) — the only shuffled rows
@@ -16,13 +16,17 @@ Scale design (100 TB posture):
 - embedding cosine: exact all-pairs join for the gate/verification;
   embedding_near_dup_pairs_lsh (banded hyperplanes -> equi-join -> exact
   re-rank) is the scale path; query-centric top-k lives in similarity.py.
-- every candidate join (MinHash, SimHash, embedding LSH, winnowing; full
-  and incremental) is one :func:`_bucket_pairs`, which caps degenerate hot
-  buckets (boilerplate text / duplicate-heavy embeddings) so no bucket can
-  go quadratic.
+- MinHash finds and verifies its pairs bucket-local (full and
+  incremental): one hash exchange on (band, bucket), then one
+  ``mapInArrow`` per partition pairs each bucket's members and counts their
+  equal signature positions (:func:`_minhash_bucket_pairs`). Every other
+  candidate join (SimHash, embedding LSH, winnowing) is one
+  :func:`_bucket_pairs`. Both cap degenerate hot buckets (boilerplate text
+  / duplicate-heavy embeddings) so no bucket can go quadratic.
 
-Everything below the signature computation is built-in DataFrame ops so
-Catalyst plans the joins; signatures themselves are Arrow-vectorized numpy
+Below the signature computation, everything but the MinHash bucket stage
+is built-in DataFrame ops so Catalyst plans the joins; signatures and that
+stage are Arrow-vectorized numpy
 (kernel choices are MEASURED — see docstrings and BENCH/BASELINE.md).
 """
 
@@ -325,9 +329,10 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3,
 
 def _band_signatures(signatures: DataFrame, bands: int, rows_per_band: int,
                      portable: bool) -> DataFrame:
-    """(doc_id, band, bucket): one row per signature band. Shared by the
-    full (:func:`minhash_lsh_candidates`) and incremental paths so both
-    bucket identically.
+    """(doc_id, band, bucket, sig): one row per signature band, each
+    carrying the doc's full signature so its bucket can verify in place.
+    Shared by the full (:func:`minhash_lsh_candidates`) and incremental
+    paths so both bucket identically.
 
     The explode is built as ONE parsed SQL expression rather than ~100
     Column objects (a py4j round trip each, ~0.5 s of driver planning per
@@ -348,50 +353,140 @@ def _band_signatures(signatures: DataFrame, bands: int, rows_per_band: int,
         f"struct({b} AS band, {bucket(b)} AS bucket)" for b in range(bands)
     )
     return signatures.select(
-        "doc_id", F.expr(f"explode(array({structs}))").alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
+        "doc_id", "sig", F.expr(f"explode(array({structs}))").alias("bb")
+    ).select("doc_id", "bb.band", "bb.bucket", "sig")
+
+
+#: bytes of (pairs x num_hashes) temporaries one verify chunk may allocate
+_VERIFY_CHUNK_BYTES = 64 << 20
+
+
+def _pair_chunks(starts: np.ndarray, sizes: np.ndarray, chunk: int):
+    """(ia, ib): every row pair ia < ib inside each run ``[start, start +
+    size)``, in index arrays of at most ``chunk`` pairs (or one anchor row's
+    partners when those alone fill a chunk)."""
+    anchors = np.repeat(starts, sizes) + (
+        np.arange(sizes.sum()) - np.repeat(np.cumsum(sizes) - sizes, sizes))
+    partners = np.repeat(starts + sizes, sizes) - anchors - 1
+    anchors, partners = anchors[partners > 0], partners[partners > 0]
+    done = np.r_[0, np.cumsum(partners)]
+    i = 0
+    while i < len(anchors):
+        j = max(int(np.searchsorted(done, done[i] + chunk, side="right")) - 1, i + 1)
+        if partners[i] > chunk:  # a hot anchor: walk its partners in chunks
+            for lo in range(1, partners[i] + 1, chunk):
+                ib = anchors[i] + np.arange(lo, min(lo + chunk, partners[i] + 1))
+                yield np.full(len(ib), anchors[i]), ib
+        else:
+            p = partners[i:j]
+            ia = np.repeat(anchors[i:j], p)
+            yield ia, ia + 1 + np.arange(len(ia)) - np.repeat(done[i:j] - done[i], p)
+        i = j
+
+
+def _minhash_bucket_pairs(banded: DataFrame, max_bucket_size: int,
+                          new_col: str | None = None) -> DataFrame:
+    """The MinHash candidate and verify stage, bucket-local: (doc_a, doc_b,
+    agree) for every pair doc_a < doc_b sharing a (band, bucket) of
+    ``banded`` (:func:`_band_signatures` rows), where ``agree`` counts the
+    equal positions of the two signatures. A pair comes out once per shared
+    bucket; the caller dedups.
+
+    One hash exchange on (band, bucket) puts each bucket in one partition;
+    one ``mapInArrow`` then sorts the partition by (band, bucket, doc_id),
+    skips buckets of one member or over ``max_bucket_size``, and pairs and
+    verifies the rest in numpy, in chunks of at most ``_VERIFY_CHUNK_BYTES``
+    of temporaries. Not a per-bucket ``groupBy().applyInArrow``: almost
+    every bucket is a singleton, and a Python call per bucket measured
+    6x slower than this per-partition map (SCALE.md §2).
+
+    A NULL doc_id counts toward its bucket's size, as in the DuckDB twin's
+    ``count(*)``, but pairs with nothing, as under a join's ``<``; nor does
+    an id pair with itself. ``new_col`` names a boolean column marking the
+    new rows of an incremental run: only pairs with a new side come out,
+    and the cap still counts old ∪ new, so its decisions match a full run.
+    """
+    id_type = banded.schema["doc_id"].dataType.simpleString()
+    extra = [new_col] if new_col else []
+
+    def per_partition(batches):
+        # a bucket's rows may span batches: verify the whole partition
+        batches = list(batches)
+        if sum(b.num_rows for b in batches) < 2:
+            return
+        part = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+        n = part.num_rows
+        order = pc.sort_indices(part, sort_keys=[
+            ("band", "ascending"), ("bucket", "ascending"), ("doc_id", "ascending")])
+        band, bucket, ids = (part.column(c).take(order) for c in ("band", "bucket", "doc_id"))
+
+        def differs(col):  # row i differs from row i - 1
+            return pc.not_equal(col[1:], col[:-1]).fill_null(True).to_numpy(
+                zero_copy_only=False)
+
+        starts = np.flatnonzero(np.r_[True, differs(band) | differs(bucket)])
+        sizes = np.diff(np.r_[starts, n])
+        keep = (sizes > 1) & (sizes <= max_bucket_size)
+        if not keep.any():
+            return
+        # equal ids are adjacent within a bucket: one run code per id
+        id_run = np.cumsum(np.r_[True, differs(ids)])
+        valid = ids.is_valid().to_numpy(zero_copy_only=False)
+        is_new = (part.column(new_col).take(order).to_numpy(zero_copy_only=False)
+                  if new_col else None)
+        sig, _ = flat(part, "sig")
+        sig = sig.reshape(n, -1)[order.to_numpy()]
+        # per pair and hash: two gathered int64 values and one bool
+        chunk = max(1, _VERIFY_CHUNK_BYTES // (17 * sig.shape[1]))
+        for ia, ib in _pair_chunks(starts[keep], sizes[keep], chunk):
+            ok = valid[ia] & valid[ib] & (id_run[ia] != id_run[ib])
+            if new_col:
+                ok &= is_new[ia] | is_new[ib]
+            ia, ib = ia[ok], ib[ok]
+            if not len(ia):
+                continue
+            agree = (sig[ia] == sig[ib]).sum(axis=1, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [ids.take(ia), ids.take(ib), pa.array(agree)],
+                names=["doc_a", "doc_b", "agree"])
+
+    rows = banded.select("doc_id", "band", "bucket", "sig", *extra)
+    return rows.repartition("band", "bucket").mapInArrow(
+        per_partition, f"doc_a {id_type}, doc_b {id_type}, agree int")
 
 
 def minhash_lsh_candidates(signatures: DataFrame, bands: int = 16,
                            rows_per_band: int = 4,
                            max_bucket_size: int = 100_000,
                            portable: bool = False) -> DataFrame:
-    """Band the signature; candidates = pairs sharing any band bucket.
-    The quadratic join becomes an equi-join on (band, bucket).
+    """Band the signature; candidates = distinct pairs sharing any band
+    bucket, formed bucket-local (:func:`_minhash_bucket_pairs`).
 
     ``max_bucket_size`` caps the per-bucket fanout: a degenerate bucket
     (boilerplate text collapsing millions of docs into one signature band)
-    would make the candidate join quadratic in that bucket, so buckets above
-    the cap are dropped before the self-join. Near-dup pairs inside a dropped
-    bucket still surface through the doc's other bands.
+    would make its pairs quadratic, so buckets above the cap form none.
+    Near-dup pairs inside a dropped bucket still surface through the doc's
+    other bands.
 
     ``portable=True`` keeps the bucket as the raw comma-joined value string
     (equality-identical to the xxhash64 compaction, modulo hash collisions)
     so the DuckDB twin can reproduce it; production hashes it to a long to
     shrink shuffle rows."""
     banded = _band_signatures(signatures, bands, rows_per_band, portable)
-    return _bucket_pairs(banded, ["band", "bucket"], max_bucket_size).distinct()
+    return _minhash_bucket_pairs(banded, max_bucket_size).select(
+        "doc_a", "doc_b").distinct()
 
 
-def _verify_signatures(cands: DataFrame, sigs: DataFrame, num_hashes: int,
-                       threshold: float) -> DataFrame:
-    """(doc_a, doc_b, est_jaccard) of the candidate pairs whose signature
-    agreement rate, an unbiased Jaccard estimate, reaches ``threshold``."""
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(num_hashes)
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", F.round(agree, 6))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
-    )
+def _verified(pairs: DataFrame, num_hashes: int, threshold: float,
+              persist: bool) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard), once per pair, of the bucket pairs whose
+    signature agreement rate, an unbiased Jaccard estimate, reaches
+    ``threshold``; cached (see :func:`unpersist_intermediates`) if
+    ``persist``."""
+    est = F.round(F.col("agree") / F.lit(num_hashes), 6)
+    out = (pairs.select("doc_a", "doc_b", est.alias("est_jaccard"))
+           .where(F.col("est_jaccard") >= threshold).distinct())
+    return _attach_persisted(out.persist(), [out]) if persist else out
 
 
 def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8, num_hashes: int = 64,
@@ -401,31 +496,20 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8, num_hashes: int
     """LSH candidates verified by exact signature agreement rate (an unbiased
     Jaccard estimate).
 
-    ``persist=True`` caches the O(docs x 64-long) signature table
-    (MEMORY_AND_DISK) because it is consumed 3x (banding, both verify
-    sides) plus the hot-bucket count — the expensive gram-hash kernel then
-    runs once. It caches the verified pairs too, so a caller that collects
-    them and then clusters them (:func:`connected_components`) does not
-    re-run the band, self-join, distinct and verify joins. Lifetime note:
-    both caches live until LRU eviction or :func:`unpersist_intermediates`
-    (which releases both); repeat invocations with identical inputs share
-    one entry (Spark dedups by canonicalized plan). Pass ``persist=False``
-    to recompute instead."""
-    rows_per_band = num_hashes // bands
+    The signatures are read once, by the banding: each band row carries
+    the full signature, and each bucket verifies its own pairs
+    (:func:`_minhash_bucket_pairs`), so no join re-reads them.
+    ``persist=True`` caches the verified pairs (MEMORY_AND_DISK), so a
+    caller that collects them and then clusters them
+    (:func:`connected_components`) does not re-run the signatures, the
+    bucket stage and the distinct. Lifetime note: the cache lives until LRU
+    eviction or :func:`unpersist_intermediates`; repeat invocations with
+    identical inputs share one entry (Spark dedups by canonicalized plan).
+    Pass ``persist=False`` to recompute instead."""
     sigs = minhash_signatures(docs, num_hashes, n, seed, portable=portable)
-    persisted = []
-    if persist:
-        sigs = sigs.persist()
-        persisted.append(sigs)
-    cands = minhash_lsh_candidates(
-        sigs, bands, rows_per_band,
-        max_bucket_size=max_bucket_size, portable=portable,
-    )
-    out = _verify_signatures(cands, sigs, num_hashes, threshold)
-    if persist:
-        out = out.persist()
-        persisted.append(out)
-    return _attach_persisted(out, persisted)
+    banded = _band_signatures(sigs, bands, num_hashes // bands, portable)
+    return _verified(_minhash_bucket_pairs(banded, max_bucket_size),
+                     num_hashes, threshold, persist)
 
 
 def minhash_dedup_pairs_incremental(new_docs: DataFrame,
@@ -437,48 +521,38 @@ def minhash_dedup_pairs_incremental(new_docs: DataFrame,
                                     portable: bool = False,
                                     max_bucket_size: int = 100_000) -> DataFrame:
     """Incremental MinHash+LSH dedup for append-only corpora: signatures
-    are computed for ``new_docs`` ONLY and joined against a persisted
+    are computed for ``new_docs`` ONLY and banded together with a persisted
     signature index ``existing_sigs`` — the (doc_id, sig) table produced
     by :func:`minhash_signatures` with the SAME num_hashes/n/seed/portable
     settings (typically written to parquet by the previous run).
 
     Returns exactly the pairs a full recompute over old ∪ new would emit
     that touch >= 1 new doc; old×old pairs were already reported by the
-    run that built the index, so they are neither recomputed nor
-    re-verified.  Equivalence contract (pinned in pytest and by the
-    minhash_incremental oracle row): pairs_full(old ∪ new) ==
-    pairs_full(old) ∪ incremental(new, sigs(old)).
+    run that built the index, so they are not returned.  Equivalence
+    contract (pinned in pytest and by the minhash_incremental oracle row):
+    pairs_full(old ∪ new) == pairs_full(old) ∪ incremental(new, sigs(old)).
 
     Scale posture: the expensive gram-hash/min-scatter kernel runs over
-    the new docs only; the candidate join (:func:`_bucket_pairs` with
-    ``new_col``) probes with the (small) new-doc banded rows only, so
-    members of an old×old bucket never pair with each other; the
-    hot-bucket cap is counted over the UNION banded table so cap
-    decisions match the full run; signature-verify joins fetch only docs
-    that appear in a candidate. doc_ids must be unique across old ∪ new
-    (append-only contract).
+    the new docs only. The bucket stage (:func:`_minhash_bucket_pairs`
+    with ``new_col``) bands old ∪ new, so the hot-bucket cap counts the
+    union and its decisions match the full run, and it verifies only the
+    pairs with a new side. doc_ids must be unique across old ∪ new
+    (append-only contract); an id on both sides never pairs with itself.
+    ``persist`` caches the verified pairs as :func:`minhash_dedup_pairs`
+    does.
     """
     rows_per_band = num_hashes // bands
     new_sigs = minhash_signatures(new_docs, num_hashes, n, seed,
                                   portable=portable)
-    persisted = []
-    if persist:
-        new_sigs = new_sigs.persist()
-        persisted.append(new_sigs)
-    all_sigs = existing_sigs.select("doc_id", "sig").unionByName(
-        new_sigs.select("doc_id", "sig")
-    )
     banded_all = _band_signatures(
         existing_sigs.select("doc_id", "sig"), bands, rows_per_band, portable
     ).withColumn("is_new", F.lit(False)).unionByName(
         _band_signatures(new_sigs, bands, rows_per_band, portable)
         .withColumn("is_new", F.lit(True))
     )
-    cands = _bucket_pairs(
-        banded_all, ["band", "bucket"], max_bucket_size, new_col="is_new"
-    ).distinct()
-    out = _verify_signatures(cands, all_sigs, num_hashes, threshold)
-    return _attach_persisted(out, persisted)
+    return _verified(
+        _minhash_bucket_pairs(banded_all, max_bucket_size, new_col="is_new"),
+        num_hashes, threshold, persist)
 
 
 def minhash_dedup_pairs_incremental_sql(

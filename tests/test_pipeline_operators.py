@@ -152,6 +152,96 @@ def test_minhash_incremental_equals_full_recompute(spark):
     assert not any(a not in new_ids and b not in new_ids for a, b, _ in inc)
 
 
+_MH_TEXT = " ".join(f"w{i}" for i in range(30))
+
+
+def test_minhash_null_doc_id_forms_no_pair(spark):
+    """A NULL doc_id pairs with nothing, as under a join's ``<``, but it
+    still counts toward its bucket's size for the cap, as the DuckDB
+    twin's count(*) does."""
+    df = spark.createDataFrame(
+        [(None, _MH_TEXT), ("a", _MH_TEXT), ("b", _MH_TEXT)],
+        "doc_id string, text string")
+    kw = dict(threshold=0.5, num_hashes=16, bands=4, persist=False)
+    got = [tuple(r) for r in dedup.minhash_dedup_pairs(df, **kw).collect()]
+    assert got == [("a", "b", 1.0)]
+    # every bucket holds NULL, a and b: three members, over a cap of 2
+    assert dedup.minhash_dedup_pairs(df, max_bucket_size=2, **kw).collect() == []
+
+
+def test_minhash_incremental_id_on_both_sides_never_self_pairs(spark):
+    """An id in the old index and among the new docs shares every bucket
+    with itself; it must not pair with itself, while its pair with another
+    new doc still comes out once."""
+    old = spark.createDataFrame([("x", _MH_TEXT)], "doc_id string, text string")
+    new = spark.createDataFrame([("x", _MH_TEXT), ("y", _MH_TEXT)],
+                                "doc_id string, text string")
+    index = dedup.minhash_signatures(old, num_hashes=16)
+    got = dedup.minhash_dedup_pairs_incremental(
+        new, index, threshold=0.5, num_hashes=16, bands=4, persist=False)
+    assert [tuple(r) for r in got.collect()] == [("x", "y", 1.0)]
+
+
+def test_minhash_capped_clusters_match_duckdb_twin(spark):
+    """Clusters of 3-5 near-duplicates at max_bucket_size=2: most of their
+    shared buckets are capped, so a pair may surface only through a band
+    where just two members agree. The pairs must equal the DuckDB twin's,
+    value for value; emitting a pair only from its lowest agreeing band
+    loses the pairs whose lowest band was capped."""
+    import random
+
+    import duckdb
+
+    rng = random.Random(16)
+    vocab = [f"v{i}" for i in range(400)]
+    rows = []
+    for c in range(12):
+        base = [rng.choice(vocab) for _ in range(40)]
+        for m in range(3 + c % 3):
+            words = list(base)
+            for pos in rng.sample(range(len(words)), 2):
+                words[pos] = rng.choice(vocab)
+            rows.append((f"c{c:02d}m{m}", " ".join(words)))
+    rows += [(f"s{i:02d}", " ".join(rng.choice(vocab) for _ in range(40)))
+             for i in range(20)]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    kw = dict(threshold=0.3, num_hashes=32, bands=8)
+    sigs = dedup.minhash_signatures(df, num_hashes=32, portable=True)
+    banded = dedup._band_signatures(sigs, 8, 4, portable=True)
+    over = banded.groupBy("band", "bucket").count().where("count > 2").count()
+    assert over > 0  # the cap really hits
+    got = sorted(tuple(r) for r in dedup.minhash_dedup_pairs(
+        df, portable=True, max_bucket_size=2, persist=False, **kw).collect())
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    want = sorted(tuple(r) for r in con.execute(
+        dedup.minhash_dedup_pairs_sql(max_bucket_size=2, **kw)).fetchall())
+    assert got and got == want
+
+
+def test_minhash_dedup_pairs_spark_job_budget(spark):
+    """One minhash_dedup_pairs(...).collect() over a small cached input, in
+    one split per core, runs 5 Spark jobs; the join pipeline it replaced
+    (hot-bucket count and anti-join, self-join, distinct, two verify joins)
+    ran 16."""
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        [(f"d{i:02d}", " ".join(f"w{(i * 7 + j) % 50}" for j in range(20)))
+         for i in range(40)], "doc_id string, text string",
+    ).repartition(sc.defaultParallelism).persist()
+    docs.count()
+    sc.setJobGroup("minhash-job-budget", "minhash-job-budget")
+    try:
+        pairs = dedup.minhash_dedup_pairs(docs, threshold=0.5, num_hashes=16, bands=4)
+        pairs.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("minhash-job-budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        dedup.unpersist_intermediates(pairs)
+        docs.unpersist()
+    assert len(jobs) == 5, sorted(jobs)
+
+
 def test_winnow_incremental_equals_full_recompute(spark):
     """Equivalence contract for the MOSS analogue: pairs_full(old ∪ new)
     == pairs_full(old) ∪ incremental(new, fps(old)) — dup groups span
@@ -358,8 +448,8 @@ def test_unpersist_intermediates_releases_cache(docs_small):
         docs_small.limit(10), threshold=0.9, num_hashes=16, bands=4
     )
     pairs.count()
-    # the signatures and the verified pairs
-    assert dedup.unpersist_intermediates(pairs) == 2
+    # the verified pairs: the signatures are read once, so not cached
+    assert dedup.unpersist_intermediates(pairs) == 1
     assert dedup.unpersist_intermediates(pairs) == 0  # idempotent
 
 

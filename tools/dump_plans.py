@@ -57,6 +57,16 @@ def _minhash_signatures(spark, docs, sf_dir):
         docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")))
 
 
+def _minhash_dedup_pairs(spark, docs, sf_dir):
+    from pyspark.sql import functions as F
+
+    from cardinality_estimation_evaluation_framework_spark.operators import dedup
+
+    return dedup.minhash_dedup_pairs(_cached(
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")),
+        persist=False)
+
+
 def _decontam_docs(docs):
     """(docs, bench): string doc ids, and every 97th doc as the benchmark."""
     from pyspark.sql import functions as F
@@ -135,6 +145,11 @@ BUILDERS = {
     "minhash_signatures": (
         "minhash_signatures(cached(docs.select(doc_id cast string, text)))",
         _minhash_signatures,
+    ),
+    "minhash_dedup_pairs": (
+        "minhash_dedup_pairs(cached(docs.select(doc_id cast string, text)),"
+        " persist=False)",
+        _minhash_dedup_pairs,
     ),
     "bloom_build_partials": (
         "the sketch_partials frame of build_benchmark_bloom(bench, n=5,"

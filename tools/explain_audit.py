@@ -149,18 +149,19 @@ def main() -> None:
         ["BroadcastHashJoin"],
     ))
 
-    # 5. minhash LSH candidate join: equi-join on (band,bucket), no cartesian
+    # 5. minhash LSH candidates: one hash exchange on (band, bucket), then
+    # each partition pairs its buckets in a mapInArrow; no cartesian
     sigs = dedup_ops.minhash_signatures(docs.limit(100).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"))
     cands = dedup_ops.minhash_lsh_candidates(sigs)
     lsh_plan = plan_of(cands)
     sections.append((
-        "minhash LSH candidates (band-bucket equi-join, never cartesian)",
+        "minhash LSH candidates (one (band, bucket) exchange, bucket-local pairs)",
         lsh_plan,
-        ["Join"],
+        ["hashpartitioning(band", "MapInArrow"],
     ))
     assert "CartesianProduct" not in lsh_plan, "LSH join degenerated to cartesian!"
-    # hot-bucket cap must be groupBy-count + anti-join, not a sorted window
+    # hot-bucket cap must be counted in the bucket stage, not a sorted window
     assert "Window" not in tree_of(lsh_plan), (
         "hot-bucket cap regressed to a window over the banded rows!")
 

@@ -15,6 +15,7 @@ tools/make_sfbig.py):
 2. FULL-PARAM engine run (k=64/bands=16, the gate row's config): Spark
    wall time, pair count, CC rounds, per-round (propagate, count-job)
    seconds — the convergence-check overhead measurement for SCALE.md §5.
+   Sections 1 and 2 also record the shuffle bytes their Spark jobs wrote.
 3. Bloom decontam superset check at 100x: flag_contaminated_bloom vs
    ngram_overlap_exact — no false negatives, FP overcount recorded.
 4. (round 6) winnow_near_dup at gate params (k=3, w=4, min_shared=2)
@@ -74,6 +75,15 @@ def dump(out: dict) -> None:
         json.dump(out, fh, indent=1)
 
 
+def shuffle_written(spark) -> int:
+    """Shuffle bytes written by every task of the session so far, from the
+    status store once the listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    ex = sc.statusStore().executorList(True)
+    return sum(ex.apply(i).totalShuffleWrite() for i in range(ex.size()))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".sfbig100")
     spark = get_spark("gate100", cores=32)
@@ -88,10 +98,11 @@ def main() -> int:
     con = duckdb.connect()
     con.execute(f"""CREATE VIEW documents AS
         SELECT * FROM read_parquet('{sf_dir}/documents.parquet')""")
-    t0 = time.time()
+    t0, w0 = time.time(), shuffle_written(spark)
     pairs = dedup_ops.minhash_dedup_pairs(docs, portable=True, **LIGHT)
     pairs_pdf = pairs.toPandas()
     out["light_pairs_spark_sec"] = round(time.time() - t0, 1)
+    out["light_pairs_shuffle_bytes"] = shuffle_written(spark) - w0
     out["light_pairs_rows"] = len(pairs_pdf)
     t0 = time.time()
     sql = dedup_ops.minhash_dedup_pairs_sql(
@@ -137,6 +148,7 @@ def main() -> int:
     out["light_cc_ok"] = ok
     failures += not ok
     n_clusters = len(set(cc_pdf["rep"])) if len(cc_pdf) else 0
+    out["light_cc_clusters"] = n_clusters
     print(f"light cc: {'OK' if ok else 'MISMATCH'} members={len(a)} "
           f"clusters={n_clusters} rounds={out['light_cc_rounds']} "
           f"spark={out['light_cc_spark_sec']}s "
@@ -144,11 +156,12 @@ def main() -> int:
     dump(out)
 
     # ---- 2. full-param engine run (no oracle; gate-row config) ----
-    t0 = time.time()
+    t0, w0 = time.time(), shuffle_written(spark)
     pairs_full = dedup_ops.minhash_dedup_pairs(docs, portable=True, **FULL)
     cc_full = dedup_ops.connected_components(pairs_full)
     cc_full_cnt = cc_full.count()
     out["full_spark_sec"] = round(time.time() - t0, 1)
+    out["full_shuffle_bytes"] = shuffle_written(spark) - w0
     out["full_cc_members"] = cc_full_cnt
     out["full_cc_rounds"] = cc_full._cc_rounds
     out["full_cc_round_secs"] = [
